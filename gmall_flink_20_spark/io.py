@@ -170,27 +170,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events(df)
-    # EXPERIMENT KNOB (r13 measurement harness, not a production path):
-    # fan out every table scan so a per-query A/B can identify which
-    # queries' scan-side work dominates. Off by default.
-    if os.environ.get("SPARK_GRAFT_FANOUT_TABLES") == "1":
-        df = fan_out_scan(df, _FANOUT_KEYS.get(name, df.columns[0]))
     _TABLE_CACHE[key] = (fp, df)
     return df
-
-
-_FANOUT_KEYS = {
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-    "events": "event_id",
-    "lineitem": "l_orderkey",
-    "orders": "o_orderkey",
-    "customer": "c_custkey",
-    "supplier": "s_suppkey",
-    "part": "p_partkey",
-    "nation": "n_nationkey",
-    "region": "r_regionkey",
-}
 
 
 def _normalize_events(df: DataFrame) -> DataFrame:

@@ -33,6 +33,9 @@ __all__ = [
     "side_output_fanout",
     "stage_segment_dir",
     "commit_segment",
+    "token_seen",
+    "append_segment",
+    "absorbed_tokens",
     "committed_segments",
     "read_with_segments",
     "read_segments_pinned",
@@ -69,19 +72,27 @@ def run_concurrently(*thunks):
     all threads finish (no half-submitted state left behind)."""
     if len(thunks) == 1:
         return [thunks[0]()]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
     from pyspark.util import inheritable_thread_target
-    from concurrent.futures import ThreadPoolExecutor
 
     # inheritable_thread_target propagates the driver thread's JVM-local
     # properties (job description/group/tags) into pool threads — the
-    # documented PySpark idiom for concurrent driver-side job submission
+    # documented PySpark idiom for concurrent driver-side job submission.
+    # It only wraps in pinned-thread mode (a ClientServer gateway); with
+    # PYSPARK_PIN_THREAD=false it returns its argument unchanged, so
+    # wrapping the session would hand back the session, not a decorator.
     session = SparkSession.getActiveSession()
-    wrap = (
-        inheritable_thread_target(session)
-        if session is not None
-        else inheritable_thread_target
-    )
+    if not isinstance(SparkContext._gateway, ClientServer):
+        def wrap(t):
+            return t
+    elif session is not None:
+        wrap = inheritable_thread_target(session)
+    else:
+        wrap = inheritable_thread_target
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(wrap(t)) for t in thunks]
         return [f.result() for f in futs]
@@ -451,27 +462,36 @@ def side_output_fanout(
 
 # ---------------------------------------------------------------- segments
 #
-# Atomic-visibility append protocol for the persisted indexes (VERDICT
-# r10 item 5 — the READER side of query-while-ingest): a plain parquet
-# append publishes its files over a multi-file job commit, so a reader
-# listing the directory mid-append can see a TORN view (some cells'
-# new files, not others). Segments close that window with the Lucene/
-# Iceberg move: the appender writes its whole delta under a hidden
-# staging dir (`<root>/.stage_<token>` — dot-prefixed, invisible to
-# readers), then publishes it with ONE os.rename to `<root>/seg_<token>`.
-# POSIX rename is atomic, so at any instant a reader sees each segment
-# fully or not at all — pre- or post-append, never torn.
+# The ONE append protocol of every persisted index (IVF, IVF-PQ, OPQ,
+# LSH, phash): a plain parquet append publishes its files over a
+# multi-file job commit, so a reader listing the directory mid-append
+# could see a TORN view (some cells' new files, not others). Segments
+# close that window with the Lucene/Iceberg move: the appender writes
+# its whole delta under a hidden staging dir (`<root>/.stage_<token>` —
+# dot-prefixed, invisible to readers), then publishes it with ONE
+# os.rename to `<root>/seg_<token>`. POSIX rename is atomic, so at any
+# instant a reader sees each segment fully or not at all — pre- or
+# post-append, never torn.
+#
+# The token is also the append's identity (append_segment): one token
+# per batch per writer, and re-running a token the index has already
+# seen is a no-op that launches no Spark job. A foreachBatch that
+# appends under its micro-batch id is therefore idempotent on retry by
+# construction — there is never a duplicate row to collapse at read
+# time.
 #
 # Readers fold committed segments in per FRAME (`postings`, `bands`,
-# `shingles`, `hashes`) via read_with_segments; each frame loads with
-# its own basePath, so partition pruning on hive keys (list_id=,
-# band_id=) survives the union. Compactors ABSORB segments: the
-# compacted rewrite carries an `_absorbed` marker (underscore files are
-# invisible to Spark's lister) naming the tokens it folded in, and the
-# marker rides the existing two-rename swap — so a crash between the
-# swap and the segment deletion leaves absorbed segments on disk but
-# readers skip them (no double counting at any crash point), and the
-# next maintenance pass purges them.
+# `shingles`, `hashes`, `codes`) via read_with_segments; each frame
+# loads with its own basePath, so partition pruning on hive keys
+# (list_id=, band_id=) survives the union. Compactors ABSORB segments:
+# the compacted rewrite carries an `_absorbed` marker (underscore files
+# are invisible to Spark's lister) naming the tokens it folded in —
+# plus every token the frame had absorbed before, so a token stays seen
+# after its segment is purged — and the marker rides the existing
+# two-rename swap: a crash between the swap and the segment deletion
+# leaves absorbed segments on disk but readers skip them (no double
+# counting at any crash point), and the next maintenance pass purges
+# them.
 
 _SEG_PREFIX = "seg_"
 _STAGE_PREFIX = ".stage_"
@@ -495,7 +515,9 @@ def commit_segment(root: str, token: str) -> str:
     return dst
 
 
-def _absorbed_tokens(frame_dir: str) -> set[str]:
+def absorbed_tokens(frame_dir: str) -> set[str]:
+    """Tokens a full compaction folded into this live frame (its
+    frame-level ``_absorbed`` marker)."""
     import os
 
     p = os.path.join(frame_dir, _ABSORBED)
@@ -503,6 +525,53 @@ def _absorbed_tokens(frame_dir: str) -> set[str]:
         return set()
     with open(p) as f:
         return {line.strip() for line in f if line.strip()}
+
+
+def token_seen(root: str, token: str, frames) -> bool:
+    """Has the index at ``root`` already taken the append made under
+    ``token``? True when its segment is committed, or a frame's
+    ``_absorbed`` marker or a merged segment's ``_supersedes`` list
+    names it (the segment was folded into the base and purged, or
+    tier-merged away). Directory listings and marker reads only."""
+    import os
+
+    if os.path.isdir(f"{root}/{_SEG_PREFIX}{token}"):
+        return True
+    return any(
+        token in absorbed_tokens(os.path.join(root, fr))
+        or token in superseded_tokens(root, fr)
+        for fr in frames
+    )
+
+
+def append_segment(
+    root: str,
+    token: str,
+    frames: tuple[str, ...],
+    stage: Callable[[str], None],
+    commit: bool = True,
+) -> bool:
+    """Token-idempotent atomic append, shared by every index family.
+
+    If the index has already seen ``token`` (:func:`token_seen` over
+    ``frames``) this returns False before ``stage`` runs — no Spark
+    job, no file touched. Otherwise ``stage(staging_dir)`` writes the
+    family's frames under ``.stage_<token>`` (any leftover of a crashed
+    attempt under the same token is dropped first) and one
+    ``commit_segment`` rename publishes them; returns True.
+    ``commit=False`` leaves the segment staged — invisible to readers —
+    until ``commit_segment(root, token)`` publishes it (the two-phase /
+    fault-injection hook)."""
+    import shutil
+
+    if token_seen(root, token, frames):
+        return False
+    dst = stage_segment_dir(root, token)
+    shutil.rmtree(dst, ignore_errors=True)
+    stage(dst)
+    if commit:
+        commit_segment(root, token)
+    return True
 
 
 _SUPERSEDES = "_supersedes"
@@ -539,7 +608,7 @@ def committed_segments(root: str, frame: str) -> list[tuple[str, str]]:
     tokens a merged segment supersedes for this frame."""
     import os
 
-    absorbed = _absorbed_tokens(os.path.join(root, frame))
+    absorbed = absorbed_tokens(os.path.join(root, frame))
     dead = absorbed | superseded_tokens(root, frame)
     out: list[tuple[str, str]] = []
     try:
@@ -603,15 +672,28 @@ def _cell_values(cells: set[str]) -> tuple[str, list]:
         return col, vals
 
 
+def _has_data_files(d: str) -> bool:
+    """Does ``d`` hold any parquet data file? A batch with no rows stages
+    a partitioned frame as an empty dir, which Spark cannot read."""
+    import os
+
+    return any(
+        f.endswith(".parquet") for _, _, files in os.walk(d) for f in files
+    )
+
+
 def _read_segments(spark, root: str, frame: str, pairs) -> DataFrame:
     """Base frame + the given (token, frame_subdir) segment branches,
-    with cell-level absorbed exclusions applied per branch."""
+    with cell-level absorbed exclusions applied per branch; branches
+    without data files (empty batches) are skipped."""
     from pyspark.sql import functions as F
 
     base_dir = f"{root}/{frame}"
     df = spark.read.parquet(base_dir)
     cell_abs = _cell_absorbed_map(base_dir)
     for token, sub in pairs:
+        if not _has_data_files(sub):
+            continue
         seg = spark.read.parquet(sub)
         cells = cell_abs.get(token)
         if cells:
@@ -691,14 +773,19 @@ def merge_segment_frames(
     cell_abs = _cell_absorbed_map(os.path.join(root, frame))
     parts = []
     for tok, sub in live:
+        if not _has_data_files(sub):
+            continue
         seg = spark.read.parquet(sub)
         cells = cell_abs.get(tok)
         if cells:
             col, vals = _cell_values(cells)
             seg = seg.filter(~F.col(col).isin(vals))
         parts.append(seg)
-    merged = reduce(lambda a, b: a.unionByName(b), parts)
-    merged.coalesce(target_files).write.mode("overwrite").parquet(dst_frame)
+    if parts:
+        merged = reduce(lambda a, b: a.unionByName(b), parts)
+        merged.coalesce(target_files).write.mode("overwrite").parquet(dst_frame)
+    else:
+        os.makedirs(dst_frame, exist_ok=True)
     with open(os.path.join(dst_frame, _SUPERSEDES), "w") as f:
         f.write("\n".join(tokens) + "\n")
     commit_segment(root, token)
@@ -728,7 +815,7 @@ def purge_absorbed_segments(root: str, frames: list[str]) -> int:
 
     absorbed_all: set[str] | None = None
     for frame in frames:
-        toks = _absorbed_tokens(os.path.join(root, frame))
+        toks = absorbed_tokens(os.path.join(root, frame))
         absorbed_all = toks if absorbed_all is None else (absorbed_all & toks)
     n = 0
     for token in sorted(absorbed_all or ()):
@@ -964,7 +1051,7 @@ def compact_cells_incremental(
         # the new marker must PRESERVE tokens the old cell had already
         # absorbed: their segment copies may still be on disk, and
         # dropping them would re-include those rows
-        old_absorbed = _absorbed_tokens(live) if os.path.isdir(live) else set()
+        old_absorbed = absorbed_tokens(live) if os.path.isdir(live) else set()
         write_absorbed_marker(
             staged_cell, sorted(tokens_by_cell[cell] | old_absorbed)
         )

@@ -1447,8 +1447,6 @@ def ivf_index_write(
     reload ≡ retrain exactly (tested; gated by the emb_ann_ivf_trained
     oracle through the emb_index_persist registry entry).
     """
-    from ..io_sinks import write_partitioned
-
     base = with_unit(emb.select(F.col(id_col), F.col(vec_col)), vec_col, dim)
     cents = kmeans_centroids_local(
         base.select(F.col(id_col), F.col("_av").alias(vec_col)),
@@ -1474,19 +1472,31 @@ def ivf_index_write(
         {"nlist": [nlist], "train_iters": [train_iters], "dim": [dim]},
         pa.schema([(k, pa.int32()) for k in ("nlist", "train_iters", "dim")]),
     )
-    assigned = base.select(
+    _write_postings(_ivf_postings(base, cents, id_col, vec_col), path)
+
+
+def _ivf_postings(base: DataFrame, cents, id_col: str, vec_col: str) -> DataFrame:
+    """Raw-vector postings rows of ``base`` (a ``with_unit`` frame)
+    under the given coarse quantizer: (neighbor_id, nv, nn, list_id)."""
+    return base.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nv"),
         norm(F.col(vec_col)).alias("nn"),
         _assign_udf(cents)(F.col("_av")).alias("list_id"),
     )
-    # one shuffle ON THE PARTITION KEY before the write: without it every
-    # input task writes a sliver into each of the nlist directories
-    # (tasks × nlist small files — the classic partitioned-write
-    # anti-pattern); with it each cell is one tidy file. Build-time-only
-    # cost, exactly the layout job a 100 TB corpus runs once.
+
+
+def _write_postings(postings: DataFrame, root: str) -> None:
+    """Write an IVF / IVF-PQ postings frame to ``<root>/postings``,
+    partitioned by list_id. One shuffle ON THE PARTITION KEY before the
+    write: without it every input task writes a sliver into each of the
+    nlist directories (tasks × nlist small files — the classic
+    partitioned-write anti-pattern); with it each cell is one tidy file
+    per build or append."""
+    from ..io_sinks import write_partitioned
+
     write_partitioned(
-        assigned.repartition("list_id"), f"{path}/postings", ["list_id"]
+        postings.repartition("list_id"), f"{root}/postings", ["list_id"]
     )
 
 
@@ -1535,22 +1545,12 @@ def ann_ivf_persisted_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    dedup_postings: bool = False,
 ) -> DataFrame:
     """Query a persisted IVF index: reload the quantizer, probe each
     query's ``nprobe`` nearest cells, and scan ONLY those cells'
-    postings partitions.
-
-    ``dedup_postings=True`` collapses byte-identical duplicate posting
-    rows on the PRUNED scan before scoring — the relational-algebra
-    retry neutralizer for at-least-once ingest (a foreachBatch retry
-    that re-appends a batch duplicates its rows; assignment is
-    deterministic, so duplicates are exact and any survivor is correct).
-    The distinct costs one exchange over only the probed nprobe/nlist
-    slice, never the corpus — the same query-side-neutralization
-    pattern as the LSH index's anti-join (dedup.
-    lsh_index_query_incremental). Off by default so exactly-once
-    batch-built indexes keep their distinct-free plan.
+    postings partitions. Appends are token-idempotent
+    (``ivf_index_append``), so a retried ingest batch never duplicates
+    a posting and the scan needs no distinct.
 
     Plan shape (the point of persisting): the probed cell ids collect
     to the driver first (≤ |queries| × nprobe ints — index-metadata
@@ -1624,8 +1624,6 @@ def ann_ivf_persisted_topk(
     postings = read_with_segments(spark, path, "postings").filter(
         F.col("list_id").isin(probed)
     )
-    if dedup_postings:
-        postings = postings.dropDuplicates(["list_id", "neighbor_id"])
     scored = (
         F.broadcast(probes)
         .join(postings, "list_id")
@@ -1646,85 +1644,43 @@ def ann_ivf_persisted_topk(
 def ivf_index_append(
     delta: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> None:
-    """Incremental maintenance of a persisted IVF index — FAISS's
-    ``add()`` semantics on the parquet layout: assign the delta batch
-    with the FROZEN on-disk quantizer (reloaded, never retrained) and
-    APPEND its rows to the matching ``list_id=`` postings partitions.
-
-    This is the daily-ingest path a growing corpus needs: training cost
-    is paid once on the base; each append is one row-local Arrow
-    assignment pass over the delta plus a partitioned write — no
-    shuffle, no touch of existing postings files (parquet append adds
-    files inside the affected partition directories only). Readers see
-    base and delta rows identically; ann_ivf_persisted_topk output over
-    write(base)+append(delta) is bit-equal to an index built from the
-    concatenated corpus under the same frozen centroids (append order
-    invariant — tested), and gates against the base-trained SQL oracle
-    via emb_index_append."""
-    from ..io_sinks import write_partitioned
-
-    spark = delta.sparkSession
-    cents = ivf_index_load_centroids(spark, path)
-    base = with_unit(delta.select(F.col(id_col), F.col(vec_col)), vec_col, dim)
-    assigned = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        norm(F.col(vec_col)).alias("nn"),
-        _assign_udf(cents)(F.col("_av")).alias("list_id"),
-    )
-    # same key-shuffle-before-write as ivf_index_write: one file per
-    # touched cell per append, not one per (task × cell)
-    write_partitioned(
-        assigned.repartition("list_id"),
-        f"{path}/postings",
-        ["list_id"],
-        mode="append",
-    )
-
-
-def ivf_index_append_atomic(
-    delta: DataFrame,
-    path: str,
     token: str,
     commit: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-) -> str:
-    """``ivf_index_append`` under the segment protocol (io_sinks
-    segments — VERDICT r10 item 5): the delta's assigned postings write
-    to the hidden staging dir, then ONE atomic rename publishes them.
-    A reader racing this append sees the index pre- or post-append,
-    never a torn subset of the delta's cell files (the window a plain
-    multi-file parquet append leaves open). ``commit=False`` is the
-    fault-injection/two-phase hook: the segment stays staged (invisible)
-    until ``io_sinks.commit_segment(path, token)`` publishes it.
-    Returns the token. Same frozen-quantizer assignment and key-shuffled
-    one-file-per-cell layout as the in-place append, so query results
-    gate on the same oracle."""
-    from ..io_sinks import commit_segment, stage_segment_dir, write_partitioned
+) -> bool:
+    """Incremental maintenance of a persisted IVF index — FAISS's
+    ``add()`` semantics on the parquet layout: assign the delta batch
+    with the FROZEN on-disk quantizer (reloaded, never retrained) and
+    publish its postings as one atomic segment (io_sinks.
+    append_segment): staged hidden, then ONE rename, so a reader racing
+    the append sees the index pre- or post-append, never a torn subset
+    of the delta's cell files.
 
-    spark = delta.sparkSession
-    cents = ivf_index_load_centroids(spark, path)
-    base = with_unit(delta.select(F.col(id_col), F.col(vec_col)), vec_col, dim)
-    assigned = base.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        norm(F.col(vec_col)).alias("nn"),
-        _assign_udf(cents)(F.col("_av")).alias("list_id"),
-    )
-    write_partitioned(
-        assigned.repartition("list_id"),
-        f"{stage_segment_dir(path, token)}/postings",
-        ["list_id"],
-    )
-    if commit:
-        commit_segment(path, token)
-    return token
+    ``token`` names the batch: one token per batch per writer, and
+    re-running a token the index has already seen (committed, absorbed
+    by a compaction, or superseded by a merge) is a no-op that launches
+    no Spark job — a foreachBatch appending under its micro-batch id is
+    retry-safe by construction. ``commit=False`` leaves the segment
+    staged until ``io_sinks.commit_segment(path, token)``. Returns
+    True when this call wrote the segment.
+
+    Training cost is paid once on the base; each append is one
+    row-local Arrow assignment pass over the delta plus a partitioned
+    write (one file per touched cell). Query output over
+    write(base)+append(delta) is bit-equal to an index built from the
+    concatenated corpus under the same frozen centroids (append order
+    invariant — tested), and gates against the base-trained SQL oracle
+    via emb_index_append."""
+    from ..io_sinks import append_segment
+
+    def stage(dst: str) -> None:
+        cents = ivf_index_load_centroids(delta.sparkSession, path)
+        base = with_unit(delta.select(F.col(id_col), F.col(vec_col)), vec_col, dim)
+        _write_postings(_ivf_postings(base, cents, id_col, vec_col), dst)
+
+    return append_segment(path, token, ("postings",), stage, commit)
 
 
 def ivf_index_compact(
@@ -1732,11 +1688,14 @@ def ivf_index_compact(
 ) -> int:
     """Index maintenance after appends — the compaction pass a
     daily-ingest deployment schedules: every ivf_index_append adds one
-    file per touched cell, so a long-lived index accumulates
-    appends×cells small files whose open/footer overhead comes to
-    dominate probe scans. Rewrites the postings one-file-per-cell
-    (key shuffle + partitioned write into a sibling dir, then a rename
-    swap) and returns the final data-file count.
+    segment with one file per touched cell, so a long-lived index
+    accumulates appends×cells small files whose open/footer overhead
+    comes to dominate probe scans. Folds every committed segment into
+    the postings one-file-per-cell (key shuffle + partitioned write
+    into a sibling dir, then a rename swap) and returns the final
+    data-file count. The absorbed marker keeps the tokens earlier
+    compactions absorbed, so a purged segment's token stays seen by
+    ``ivf_index_append``.
 
     Query results are INVARIANT (row set unchanged; doubles round-trip
     parquet exactly) — proven by the emb_index_compact registry entry
@@ -1760,6 +1719,7 @@ def ivf_index_compact(
     from pathlib import Path
 
     from ..io_sinks import (
+        absorbed_tokens,
         committed_segments,
         heal_cell_sites,
         heal_compaction_site,
@@ -1795,8 +1755,10 @@ def ivf_index_compact(
         df = read_segments_pinned(spark, path, "postings", tokens)
         write_partitioned(df.repartition("list_id"), tmp, ["list_id"])
         # the marker commits WITH the rewrite (same rename): at no crash
-        # point can a reader double-count an absorbed segment
-        write_absorbed_marker(tmp, tokens)
+        # point can a reader double-count an absorbed segment. It carries
+        # the tokens earlier passes absorbed forward, so an append that
+        # re-runs a purged segment's token stays a no-op
+        write_absorbed_marker(tmp, set(tokens) | absorbed_tokens(src))
         swap_compacted(src, fail_between_renames)
         purge_absorbed_segments(path, ["postings"])
         return sum(1 for _ in Path(src).rglob("*.parquet"))
@@ -1900,8 +1862,6 @@ def ivf_pq_index_write(
     bit-equal to the in-session composite (shared oracle)."""
     import pyarrow as pa
 
-    from ..io_sinks import write_partitioned
-
     cents = kmeans_centroids_local(
         emb.select(F.col(id_col), F.col(vec_col)),
         nlist,
@@ -1945,13 +1905,18 @@ def ivf_pq_index_write(
             ]
         ),
     )
-    encoded = emb.select(
+    _write_postings(_pq_postings(emb, cents, books, m, subdim, id_col, vec_col), path)
+
+
+def _pq_postings(
+    df: DataFrame, cents, books, m: int, subdim: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Compressed postings rows of ``df`` under the given coarse
+    quantizer and PQ codebooks: (neighbor_id, list_id, codes)."""
+    return df.select(
         F.col(id_col).alias("neighbor_id"),
         _assign_udf(cents)(F.col(vec_col)).alias("list_id"),
         _pq_encode_udf(books, m, subdim)(F.col(vec_col)).alias("codes"),
-    )
-    write_partitioned(
-        encoded.repartition("list_id"), f"{path}/postings", ["list_id"]
     )
 
 
@@ -1990,7 +1955,6 @@ def ann_ivf_pq_persisted_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dedup_postings: bool = False,
 ) -> DataFrame:
     """Query a persisted IVF-PQ index: reload quantizer + codebooks,
     probe and build ADC tables DRIVER-SIDE with the exact kernels of
@@ -2002,15 +1966,8 @@ def ann_ivf_pq_persisted_topk(
     vectors. Bit-equal to ann_ivf_pq_topk under equal params (same
     training, same folds, same tiebreaks) — gated by its exact oracle
     through the emb_index_pq_persist entry. Reader-side crash healing
-    as in the uncompressed index; the scan is segment-aware, so atomic
-    appends fold in exactly as for the raw-vector layout.
-
-    ``dedup_postings=True`` is the same relational retry neutralizer as
-    in ann_ivf_persisted_topk: assignment AND encoding are
-    deterministic under the frozen artifacts, so an at-least-once
-    re-append duplicates rows byte-identically and a distinct over the
-    PRUNED probe slice collapses them — the emb_index_pq_streaming
-    entry's at-least-once guarantee."""
+    as in the uncompressed index; the scan is segment-aware, so
+    appended segments fold in exactly as for the raw-vector layout."""
     from ..io_sinks import heal_missing_cells, heal_missing_src
 
     heal_missing_src(f"{path}/postings")
@@ -2037,44 +1994,36 @@ def ann_ivf_pq_persisted_topk(
     postings = read_with_segments(spark, path, "postings").filter(
         F.col("list_id").isin(probed)
     )
-    if dedup_postings:
-        postings = postings.dropDuplicates(["list_id", "neighbor_id"])
     return _adc_ranked(probes, postings, k, m, ks)
 
 
 def ivf_pq_index_append(
     delta: DataFrame,
     path: str,
+    token: str,
+    commit: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> None:
+) -> bool:
     """Incremental maintenance of a persisted IVF-PQ index — FAISS
     ``add()`` on the compressed layout: assign AND encode the delta
     batch with the FROZEN on-disk artifacts (coarse quantizer + PQ
-    codebooks, reloaded, never retrained) and append the (neighbor_id,
-    codes) rows into the matching ``list_id=`` postings partitions.
-    Row-local Arrow passes + a partitioned append — no shuffle of
-    existing data, no touch of existing files. Compaction reuses
+    codebooks, reloaded, never retrained) and publish the (neighbor_id,
+    codes) rows as one atomic, token-idempotent segment — the same
+    contract as ``ivf_index_append``. Compaction reuses
     ivf_index_compact unchanged (the swap convention is layout-
     agnostic). Gated through emb_index_pq_append against the
     base-trained IVF-PQ oracle."""
-    from ..io_sinks import write_partitioned
+    from ..io_sinks import append_segment
 
-    spark = delta.sparkSession
-    cents, books, meta = ivf_pq_index_load(spark, path)
-    encoded = delta.select(
-        F.col(id_col).alias("neighbor_id"),
-        _assign_udf(cents)(F.col(vec_col)).alias("list_id"),
-        _pq_encode_udf(books, meta["m"], meta["subdim"])(F.col(vec_col)).alias(
-            "codes"
-        ),
-    )
-    write_partitioned(
-        encoded.repartition("list_id"),
-        f"{path}/postings",
-        ["list_id"],
-        mode="append",
-    )
+    def stage(dst: str) -> None:
+        cents, books, meta = ivf_pq_index_load(delta.sparkSession, path)
+        _write_postings(
+            _pq_postings(delta, cents, books, meta["m"], meta["subdim"], id_col, vec_col),
+            dst,
+        )
+
+    return append_segment(path, token, ("postings",), stage, commit)
 
 
 # ---------------------------------------------------------------- OPQ
@@ -2376,10 +2325,18 @@ def opq_index_write(
         {"m": [m], "subdim": [subdim], "ks": [ks]},
         pa.schema([(kk, pa.int32()) for kk in ("m", "subdim", "ks")]),
     )
+    _write_opq_codes(emb, path, R, books, m, subdim, id_col, vec_col)
+
+
+def _write_opq_codes(
+    df: DataFrame, root: str, R, books, m: int, subdim: int, id_col: str, vec_col: str
+) -> None:
+    """Rotate + encode ``df`` and write the (neighbor_id, codes) frame
+    to ``<root>/codes``."""
     enc = _opq_encode_udf(R, books, m, subdim)
-    emb.select(F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
+    df.select(
+        F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")
+    ).write.mode("overwrite").parquet(f"{root}/codes")
 
 
 def opq_index_load(spark, path: str):
@@ -2406,18 +2363,13 @@ def ann_opq_persisted_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dedup_codes: bool = False,
 ) -> DataFrame:
     """Query a persisted OPQ index: reload rotation + codebooks, scan
     the stored codes (never the raw vectors), ADC-rank. Bit-equal to
     the in-session ann_opq_topk under the same artifacts (tested) —
     the persisted path's whole read is m bytes/vector. The codes scan
-    is segment-aware (atomic appends fold in); ``dedup_codes=True`` is
-    the retry neutralizer for at-least-once streaming ingest: encoding
-    under frozen artifacts is deterministic, so re-appended duplicates
-    are byte-identical and one distinct on neighbor_id collapses them
-    (the OPQ scan is flat, so the distinct costs one exchange over the
-    m-byte codes — the layout's normal scan unit)."""
+    is segment-aware: appended segments fold in, and token-idempotent
+    appends leave no duplicate to collapse."""
     from ..io_sinks import read_with_segments
 
     R, books, m, subdim, ks = opq_index_load(spark, path)
@@ -2428,52 +2380,28 @@ def ann_opq_persisted_topk(
         .collect()
     )
     encoded = read_with_segments(spark, path, "codes")
-    if dedup_codes:
-        encoded = encoded.dropDuplicates(["neighbor_id"])
     return _opq_adc_rank(spark, encoded, qrows, R, books, k, m, subdim, ks)
 
 
 def opq_index_append(
     delta: DataFrame,
     path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance of a persisted OPQ index — FAISS
-    ``add()`` on the `OPQMatrix,PQ` chain: rotate AND encode the delta
-    batch with the FROZEN stored artifacts (rotation + codebooks,
-    reloaded, never retrained) and append the (neighbor_id, codes)
-    rows to the codes frame. One row-local Arrow pass + a plain
-    parquet append — no shuffle, no touch of existing files. Gated
-    through emb_index_opq_append on the exact-top-1 bound oracle."""
-    spark = delta.sparkSession
-    R, books, m, subdim, _ = opq_index_load(spark, path)
-    enc = _opq_encode_udf(R, books, m, subdim)
-    delta.select(
-        F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")
-    ).write.mode("append").parquet(f"{path}/codes")
-
-
-def opq_index_append_atomic(
-    delta: DataFrame,
-    path: str,
     token: str,
     commit: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> str:
-    """``opq_index_append`` under the segment protocol: the encoded
-    delta stages hidden and publishes with ONE rename, so a reader
-    racing the append sees pre- or post-append codes, never a torn
-    subset. Returns the token."""
-    from ..io_sinks import commit_segment, stage_segment_dir
+) -> bool:
+    """Incremental maintenance of a persisted OPQ index — FAISS
+    ``add()`` on the `OPQMatrix,PQ` chain: rotate AND encode the delta
+    batch with the FROZEN stored artifacts (rotation + codebooks,
+    reloaded, never retrained) and publish the (neighbor_id, codes)
+    rows as one atomic, token-idempotent segment — the same contract
+    as ``ivf_index_append``. Gated through emb_index_opq_append on the
+    exact-top-1 bound oracle."""
+    from ..io_sinks import append_segment
 
-    spark = delta.sparkSession
-    R, books, m, subdim, _ = opq_index_load(spark, path)
-    enc = _opq_encode_udf(R, books, m, subdim)
-    delta.select(
-        F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")
-    ).write.mode("overwrite").parquet(f"{stage_segment_dir(path, token)}/codes")
-    if commit:
-        commit_segment(path, token)
-    return token
+    def stage(dst: str) -> None:
+        R, books, m, subdim, _ = opq_index_load(delta.sparkSession, path)
+        _write_opq_codes(delta, dst, R, books, m, subdim, id_col, vec_col)
+
+    return append_segment(path, token, ("codes",), stage, commit)

@@ -68,7 +68,6 @@ __all__ = [
     "encode_jpeg_progressive",
     "decode_jpeg",
     "JPEG_DECODED_SCHEMA",
-    "phash_index_append_atomic",
     "resize_images_real",
     "MEDIA_SCHEMA",
     "FEATURE_SCHEMA",
@@ -1153,34 +1152,24 @@ def phash_index_write(hashes: DataFrame, path: str) -> None:
     )
 
 
-def phash_index_append(hashes: DataFrame, path: str) -> None:
-    """Grow the persisted phash index with a processed batch (parquet
-    append). Retry-safe in combination with the query side: a retried
-    batch finding its OWN rows is neutralized by the query's anti-join
-    on the batch's ids, and duplicate rows only duplicate hash-set
-    members, which collapse in the DISTINCT the query takes."""
-    hashes.select("media_id", "phash").write.mode("append").parquet(
-        f"{path}/hashes"
-    )
-
-
-def phash_index_append_atomic(
+def phash_index_append(
     hashes: DataFrame, path: str, token: str, commit: bool = True
-) -> str:
-    """``phash_index_append`` under the segment protocol (io_sinks
-    segments): the batch's hashes stage hidden, then ONE atomic rename
-    publishes them — a reader racing the append sees the index pre- or
-    post-append, never a torn subset of the batch's files.
-    ``commit=False`` stages without publishing (complete with
-    io_sinks.commit_segment). Returns the token."""
-    from ..io_sinks import commit_segment, stage_segment_dir
+) -> bool:
+    """Grow the persisted phash index with a processed batch: its
+    (media_id, phash) rows publish as one atomic, token-idempotent
+    segment (io_sinks.append_segment) — a reader racing the append sees
+    the index pre- or post-append, never a torn subset of the batch's
+    files, and re-running a token the index has already seen is a no-op
+    that launches no Spark job. ``commit=False`` stages without
+    publishing (complete with io_sinks.commit_segment). Returns True
+    when this call wrote the segment. A retried batch whose append
+    already landed is still neutralized on the QUERY side by the
+    anti-join on the batch's ids (phash_index_query_incremental)."""
+    from ..io_sinks import append_segment
 
-    hashes.select("media_id", "phash").write.mode("overwrite").parquet(
-        f"{stage_segment_dir(path, token)}/hashes"
+    return append_segment(
+        path, token, ("hashes",), lambda dst: phash_index_write(hashes, dst), commit
     )
-    if commit:
-        commit_segment(path, token)
-    return token
 
 
 def phash_index_query_incremental(
@@ -1209,8 +1198,8 @@ def phash_index_query_incremental(
     from .simhash import simhash_near_dup
 
     new = new_hashes.select("media_id", "phash")
-    # segment-aware read: committed atomic-append segments fold in;
-    # staged (in-flight) ones are invisible — never a torn view
+    # segment-aware read: committed appended segments fold in; staged
+    # (in-flight) ones are invisible — never a torn view
     store = read_with_segments(spark, path, "hashes")
     base_h = (
         store.join(new.select("media_id"), "media_id", "left_anti")

@@ -2578,8 +2578,8 @@ def docs_lsh_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1 = docs.filter(shard == 1)
     half = F.pmod(F.col("doc_id"), F.lit(2))
-    dedup.lsh_index_append(s1.filter(half == 0), path, parallelism=spark.sparkContext.defaultParallelism)
-    dedup.lsh_index_append(s1.filter(half == 1), path, parallelism=spark.sparkContext.defaultParallelism)
+    dedup.lsh_index_append(s1.filter(half == 0), path, "a0", parallelism=spark.sparkContext.defaultParallelism)
+    dedup.lsh_index_append(s1.filter(half == 1), path, "a1", parallelism=spark.sparkContext.defaultParallelism)
     dedup.lsh_index_compact(spark, path)
     return dedup.lsh_index_query_incremental(
         spark, path, docs.filter(shard == 0), parallelism=spark.sparkContext.defaultParallelism
@@ -2805,7 +2805,7 @@ def emb_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index maintenance (operators/ann.ivf_index_append):
     the quantizer trains ONCE on the 90% base split (salted-hash
     ``% 10 != 0``), the 10% delta batch is assigned with the frozen
-    reloaded centroids and APPENDED to the postings partitions — no
+    reloaded centroids and APPENDED as one atomic segment — no
     retraining, no rewrite of existing files — then queries 0..9 probe
     the grown index. The oracle unrolls the same base-only Lloyd
     training in SQL and scans the full corpus, so the hash gate proves
@@ -2813,7 +2813,7 @@ def emb_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is memoized; the append mutates a private fresh_copy."""
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_append_")
-    ann.ivf_index_append(delta, path)
+    ann.ivf_index_append(delta, path, "d1")
     return ann.ann_ivf_persisted_topk(
         spark, path, emb, list(range(10)), 5, nprobe=4
     )
@@ -2822,8 +2822,9 @@ def emb_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index compaction invariance (operators/ann.ivf_index_compact):
     build the base index, append the delta in THREE separate batches
-    (each append leaves one file per touched cell — the daily-ingest
-    accumulation), compact to one file per cell, and answer queries
+    (each append leaves one segment with one file per touched cell —
+    the daily-ingest accumulation), compact to one file per cell, and
+    answer queries
     0..9 from the compacted index. Gated by the SAME base-trained
     oracle as emb_index_append: a hash match proves the maintenance
     pass is result-invariant while the file count drops (tested). The
@@ -2832,7 +2833,7 @@ def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_compact_")
     third = F.pmod(F.col("vec_id"), F.lit(3))
     for j in range(3):
-        ann.ivf_index_append(delta.filter(third == j), path)
+        ann.ivf_index_append(delta.filter(third == j), path, f"b{j}")
     ann.ivf_index_compact(spark, path)
     return ann.ann_ivf_persisted_topk(
         spark, path, emb, list(range(10)), 5, nprobe=4
@@ -2882,12 +2883,12 @@ def docs_lsh_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier-processed ∪ same-batch-lower-id' is EXACTLY the batch
     rule 'base or lower-id new' — so this streams byte-equal to
     docs_neardup_incremental and gates on its oracle. foreachBatch
-    retries are safe: a retried batch that already appended its own
-    bands is neutralized by the query's anti-join on the batch's ids
-    (self/same-batch index matches excluded — retry recomputes the
-    original decisions exactly), and duplicate index rows only
-    duplicate candidates, which pass through distinct(). Excluded from
-    bench (it measures the replay harness)."""
+    retries are safe: each batch appends under its micro-batch id, so
+    a retried append is a no-op, and a retried batch that already
+    appended its own bands is neutralized by the query's anti-join on
+    the batch's ids (self/same-batch index matches excluded — retry
+    recomputes the original decisions exactly). Excluded from bench
+    (it measures the replay harness)."""
 
     from .operators import sampling
     from .streaming import replay
@@ -2919,7 +2920,7 @@ def docs_lsh_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             store.upsert(
                 dedup.lsh_index_query_incremental(spark, path, b), epoch_id
             )
-            dedup.lsh_index_append(b, path)
+            dedup.lsh_index_append(b, path, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -2938,15 +2939,13 @@ def emb_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming half of the index-lifecycle symmetry (VERDICT r9
     item 4; the dedup family got its stream in round 9): the 10% delta
     split replays as a stream in three micro-batches; each batch is
-    assigned with the FROZEN on-disk quantizer and appended to the
-    postings partitions (operators/ann.ivf_index_append — FAISS add()
-    per micro-batch, the reference's two-input dim-maintenance pattern
+    assigned with the FROZEN on-disk quantizer and appended as one
+    segment (operators/ann.ivf_index_append — FAISS add() per
+    micro-batch, the reference's two-input dim-maintenance pattern
     PayReceiptWithConnectApp.java:62-65 applied to the index artifact).
-    The final probe runs with dedup_postings=True — the relational
-    retry neutralizer: an at-least-once foreachBatch retry re-appends
-    byte-identical rows (assignment is deterministic), and the distinct
-    over the PRUNED probe slice collapses them, so retries cannot
-    change answers (pinned by test_ivf_index_retry_dedup). Gates on
+    Each batch appends under its micro-batch id, so an at-least-once
+    foreachBatch retry is a token no-op and cannot change answers
+    (pinned by test_ivf_index_retry_dedup). Gates on
     emb_index_append's exact oracle: streaming ingest ≡ one-shot
     append ≡ base-trained full-corpus IVF. Excluded from bench (it
     measures the replay harness)."""
@@ -2966,7 +2965,7 @@ def emb_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             if b.count() == 0:
                 return
-            ann.ivf_index_append(b, path)
+            ann.ivf_index_append(b, path, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -2978,7 +2977,7 @@ def emb_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     return ann.ann_ivf_persisted_topk(
-        spark, path, emb, list(range(10)), 5, nprobe=4, dedup_postings=True
+        spark, path, emb, list(range(10)), 5, nprobe=4
     )
 
 
@@ -2996,7 +2995,7 @@ def emb_index_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_recover_")
-    ann.ivf_index_append(delta, path)
+    ann.ivf_index_append(delta, path, "d1")
     try:
         ann.ivf_index_compact(spark, path, fail_between_renames=True)
     except InterruptedCompaction:
@@ -3083,8 +3082,8 @@ def emb_index_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-index incremental maintenance (operators/ann.
     ivf_pq_index_append): the coarse quantizer AND PQ codebooks freeze
     on the id-prefix 90% base; the newest 10% batch is assigned and
-    ENCODED with the reloaded artifacts and appended into the postings
-    partitions in two fragmenting halves, then ivf_index_compact (the
+    ENCODED with the reloaded artifacts and appended as two fragmenting
+    segments, then ivf_index_compact (the
     layout-agnostic maintenance pass) rewrites one-file-per-cell, and
     queries 0..9 ADC-probe the grown, compacted index. One oracle hash
     (base-trained coarse + PQ Lloyd unrolled in SQL, full-corpus
@@ -3096,8 +3095,8 @@ def emb_index_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = emb.filter(F.col("vec_id") >= cut)
     path = scratch.fresh_copy(_ivf_pq_base_index(spark, sf_dir), "ivfpq_append_")
     half = F.pmod(F.col("vec_id"), F.lit(2))
-    ann.ivf_pq_index_append(delta.filter(half == 0), path)
-    ann.ivf_pq_index_append(delta.filter(half == 1), path)
+    ann.ivf_pq_index_append(delta.filter(half == 0), path, "a0")
+    ann.ivf_pq_index_append(delta.filter(half == 1), path, "a1")
     ann.ivf_index_compact(spark, path)
     return ann.ann_ivf_pq_persisted_topk(
         spark, path, emb, list(range(10)), 5, nprobe=4
@@ -3159,10 +3158,11 @@ def media_phash_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone, then APPENDS its own hashes so later batches see it. Replay
     order = id order makes this byte-equal to the batch rule, so it
     gates on media_phash_index_persist's exact oracle. foreachBatch
-    retries are safe: the query anti-joins the index against the
-    batch's own ids, so a retried batch that already appended itself
-    recomputes its original decisions exactly. Excluded from bench
-    (it measures the replay harness)."""
+    retries are safe: each batch appends under its micro-batch id (a
+    retried append is a no-op), and the query anti-joins the index
+    against the batch's own ids, so a retried batch that already
+    appended itself recomputes its original decisions exactly.
+    Excluded from bench (it measures the replay harness)."""
     from .streaming import replay
     from .streaming import topn as stopn
 
@@ -3187,7 +3187,7 @@ def media_phash_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
                 multimodal.phash_index_query_incremental(spark, path, hashes),
                 epoch_id,
             )
-            multimodal.phash_index_append(hashes, path)
+            multimodal.phash_index_append(hashes, path, f"b{epoch_id}")
         finally:
             hashes.unpersist()
 
@@ -3916,7 +3916,7 @@ def _visible_rows_fingerprint(spark: SparkSession, path: str, frames: tuple) -> 
 
 def emb_index_query_during_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-while-ingest reader isolation for the persisted IVF index
-    (VERDICT r10 item 5; operators/ann.ivf_index_append_atomic +
+    (VERDICT r10 item 5; operators/ann.ivf_index_append +
     io_sinks segments): the delta appends via the atomic-segment
     protocol — staged hidden, published by ONE rename — so a reader
     racing the append returns the pre- or post-append answer, never a
@@ -3935,7 +3935,7 @@ def emb_index_query_during_append(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, path, emb, list(range(10)), 5, nprobe=4
     )
     pre = _frozen_rows(q())
-    ann.ivf_index_append_atomic(delta, path, token="d1", commit=False)
+    ann.ivf_index_append(delta, path, "d1", commit=False)
     mid_equals_pre = _frozen_rows(q()) == pre
     io_sinks.commit_segment(path, "d1")
     return q().withColumn("mid_equals_pre", F.lit(bool(mid_equals_pre)))
@@ -3943,7 +3943,7 @@ def emb_index_query_during_append(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def docs_lsh_index_query_during_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-while-ingest reader isolation for the persisted LSH index
-    (operators/dedup.lsh_index_append_atomic): the earlier half of the
+    (operators/dedup.lsh_index_append): the earlier half of the
     new crawl shard (ids below the corpus midpoint) appends atomically
     — bands AND shingles publish in one rename, so no reader can see a
     batch's buckets without its verification sets — while the later
@@ -3965,7 +3965,7 @@ def docs_lsh_index_query_during_append(spark: SparkSession, sf_dir: str) -> Data
         _lsh_base_index(spark, sf_dir, (1, 2, 3)), "lsh_qda_"
     )
     pre = _visible_rows_fingerprint(spark, path, ("bands", "shingles"))
-    dedup.lsh_index_append_atomic(delta, path, token="d1", commit=False, parallelism=spark.sparkContext.defaultParallelism)
+    dedup.lsh_index_append(delta, path, "d1", commit=False, parallelism=spark.sparkContext.defaultParallelism)
     mid_equals_pre = (
         _visible_rows_fingerprint(spark, path, ("bands", "shingles")) == pre
     )
@@ -3977,7 +3977,7 @@ def docs_lsh_index_query_during_append(spark: SparkSession, sf_dir: str) -> Data
 
 def media_phash_index_query_during_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-while-ingest reader isolation for the persisted phash
-    index (operators/multimodal.phash_index_append_atomic) — the
+    index (operators/multimodal.phash_index_append) — the
     multimodal leg of the segment protocol: the earlier half of the new
     image shard appends atomically while the later half dedups.
     Same three-phase gate as the LSH leg (pre/mid = visible-row
@@ -3996,7 +3996,7 @@ def media_phash_index_query_during_append(spark: SparkSession, sf_dir: str) -> D
     path = scratch.fresh_copy(_phash_base_index(spark, sf_dir), "phash_qda_")
     pre = _visible_rows_fingerprint(spark, path, ("hashes",))
     dh = multimodal.image_dhash(multimodal.encode_media(delta))
-    multimodal.phash_index_append_atomic(dh, path, token="d1", commit=False)
+    multimodal.phash_index_append(dh, path, "d1", commit=False)
     mid_equals_pre = _visible_rows_fingerprint(spark, path, ("hashes",)) == pre
     io_sinks.commit_segment(path, "d1")
     qh = multimodal.image_dhash(multimodal.encode_media(query))
@@ -4033,9 +4033,7 @@ def emb_index_compact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     # among them is immaterial (readers union committed segments)
     io_sinks.run_concurrently(
         *[
-            lambda j=j: ann.ivf_index_append_atomic(
-                delta.filter(third == j), path, token=f"b{j}"
-            )
+            lambda j=j: ann.ivf_index_append(delta.filter(third == j), path, f"b{j}")
             for j in range(3)
         ]
     )
@@ -4068,8 +4066,8 @@ def docs_lsh_index_compact_incremental(spark: SparkSession, sf_dir: str) -> Data
     half = F.pmod(F.col("doc_id"), F.lit(2))
     # r14 (guide §2.6): independent atomic-segment appends overlap
     io_sinks.run_concurrently(
-        lambda: dedup.lsh_index_append_atomic(s1.filter(half == 0), path, token="a0", parallelism=spark.sparkContext.defaultParallelism),
-        lambda: dedup.lsh_index_append_atomic(s1.filter(half == 1), path, token="a1", parallelism=spark.sparkContext.defaultParallelism),
+        lambda: dedup.lsh_index_append(s1.filter(half == 0), path, "a0", parallelism=spark.sparkContext.defaultParallelism),
+        lambda: dedup.lsh_index_append(s1.filter(half == 1), path, "a1", parallelism=spark.sparkContext.defaultParallelism),
     )
     dedup.lsh_index_compact_incremental(spark, path, max_fragments=1)
     return dedup.lsh_index_query_incremental(
@@ -4099,8 +4097,8 @@ def docs_lsh_index_segment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = F.pmod(F.col("doc_id"), F.lit(2))
     # r14 (guide §2.6): independent atomic-segment appends overlap
     io_sinks.run_concurrently(
-        lambda: dedup.lsh_index_append_atomic(s1.filter(half == 0), path, token="a0", parallelism=spark.sparkContext.defaultParallelism),
-        lambda: dedup.lsh_index_append_atomic(s1.filter(half == 1), path, token="a1", parallelism=spark.sparkContext.defaultParallelism),
+        lambda: dedup.lsh_index_append(s1.filter(half == 0), path, "a0", parallelism=spark.sparkContext.defaultParallelism),
+        lambda: dedup.lsh_index_append(s1.filter(half == 1), path, "a1", parallelism=spark.sparkContext.defaultParallelism),
     )
     with maintenance_lease(path, "segment_merge"):
         assert merge_segment_frames(spark, path, "bands") is not None
@@ -4128,8 +4126,8 @@ def docs_lsh_index_compact_fenced(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     s1 = docs.filter(shard == 1)
     half = F.pmod(F.col("doc_id"), F.lit(2))
-    dedup.lsh_index_append(s1.filter(half == 0), path, parallelism=spark.sparkContext.defaultParallelism)
-    dedup.lsh_index_append(s1.filter(half == 1), path, parallelism=spark.sparkContext.defaultParallelism)
+    dedup.lsh_index_append(s1.filter(half == 0), path, "a0", parallelism=spark.sparkContext.defaultParallelism)
+    dedup.lsh_index_append(s1.filter(half == 1), path, "a1", parallelism=spark.sparkContext.defaultParallelism)
     with maintenance_lease(path, "holder"):
         try:
             dedup.lsh_index_compact(spark, path)
@@ -4154,7 +4152,7 @@ def emb_index_compact_fenced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_fence_")
-    ann.ivf_index_append(delta, path)
+    ann.ivf_index_append(delta, path, "d1")
     with maintenance_lease(path, "holder"):
         try:
             ann.ivf_index_compact(spark, path)
@@ -4186,12 +4184,8 @@ def emb_index_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_cc_")
     half = F.pmod(F.col("vec_id"), F.lit(2))
-    ann.ivf_index_append_atomic(
-        delta.filter(half == 0), path, token="w_a", commit=False
-    )
-    ann.ivf_index_append_atomic(
-        delta.filter(half == 1), path, token="w_b", commit=False
-    )
+    ann.ivf_index_append(delta.filter(half == 0), path, "w_a", commit=False)
+    ann.ivf_index_append(delta.filter(half == 1), path, "w_b", commit=False)
     io_sinks.commit_segment(path, "w_b")
     io_sinks.commit_segment(path, "w_a")
     return ann.ann_ivf_persisted_topk(
@@ -4220,11 +4214,11 @@ def docs_lsh_index_concurrent_append(spark: SparkSession, sf_dir: str) -> DataFr
         _lsh_base_index(spark, sf_dir, (1, 2, 3)), "lsh_cc_"
     )
     half = F.pmod(F.col("doc_id"), F.lit(2))
-    dedup.lsh_index_append_atomic(
-        delta.filter(half == 0), path, token="w_a", commit=False, parallelism=spark.sparkContext.defaultParallelism
+    dedup.lsh_index_append(
+        delta.filter(half == 0), path, "w_a", commit=False, parallelism=spark.sparkContext.defaultParallelism
     )
-    dedup.lsh_index_append_atomic(
-        delta.filter(half == 1), path, token="w_b", commit=False, parallelism=spark.sparkContext.defaultParallelism
+    dedup.lsh_index_append(
+        delta.filter(half == 1), path, "w_b", commit=False, parallelism=spark.sparkContext.defaultParallelism
     )
     io_sinks.commit_segment(path, "w_b")
     io_sinks.commit_segment(path, "w_a")
@@ -4238,12 +4232,9 @@ def emb_index_pq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     three micro-batches; each batch is assigned AND PQ-encoded with the
     FROZEN on-disk artifacts (coarse quantizer + codebooks, reloaded,
     never retrained — operators/ann.ivf_pq_index_append per micro-batch,
-    FAISS add() on IVFPQ) and appended into the postings partitions.
-    The final ADC probe runs with dedup_postings=True — encoding is
-    deterministic under frozen artifacts, so an at-least-once
-    foreachBatch retry re-appends byte-identical (neighbor_id, codes)
-    rows and the distinct over the pruned probe slice collapses them
-    (kill-resume pinned by test_pq_streaming_kill_resume). Gates on
+    FAISS add() on IVFPQ) and appended as one segment under its
+    micro-batch id, so an at-least-once foreachBatch retry is a token
+    no-op (kill-resume pinned by test_pq_streaming_kill_resume). Gates on
     emb_index_pq_append's exact oracle: streaming compressed ingest ≡
     one-shot compressed append. Excluded from bench (it measures the
     replay harness)."""
@@ -4265,7 +4256,7 @@ def emb_index_pq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             if b.count() == 0:
                 return
-            ann.ivf_pq_index_append(b, path)
+            ann.ivf_pq_index_append(b, path, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -4277,7 +4268,7 @@ def emb_index_pq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     return ann.ann_ivf_pq_persisted_topk(
-        spark, path, emb, list(range(10)), 5, nprobe=4, dedup_postings=True
+        spark, path, emb, list(range(10)), 5, nprobe=4
     )
 
 
@@ -4301,7 +4292,7 @@ def media_phash_index_concurrent_append(spark: SparkSession, sf_dir: str) -> Dat
         dh = multimodal.image_dhash(
             multimodal.encode_media(delta.filter(half == j))
         )
-        multimodal.phash_index_append_atomic(dh, path, token=tok, commit=False)
+        multimodal.phash_index_append(dh, path, tok, commit=False)
     io_sinks.commit_segment(path, "w_b")
     io_sinks.commit_segment(path, "w_a")
     qh = multimodal.image_dhash(multimodal.encode_media(query))
@@ -4324,7 +4315,7 @@ def emb_index_recover_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
 
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_increcover_")
-    ann.ivf_index_append_atomic(delta, path, token="d1")
+    ann.ivf_index_append(delta, path, "d1")
     counts = io_sinks.cell_fragment_counts(path, "postings")
     victims = sorted(n for n, c in counts.items() if c > 1)
     try:
@@ -4395,7 +4386,7 @@ def emb_index_opq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     opq_index_append — the rotation-chain leg of VERDICT r11 item 5):
     rotation + codebooks freeze on the id-prefix 90% base; the newest
     10% batch is rotated + encoded with the reloaded artifacts and
-    appended to the codes frame in two fragmenting halves, then queries
+    appended as two segments, then queries
     0..9 ADC-scan the grown index. Gated with the same WA6-pattern
     bound oracle as every OPQ entry (exact cosine top-1 hash-checked;
     err(OPQ) ≤ err(PQ) on the base train sample; batch recall over the
@@ -4407,8 +4398,8 @@ def emb_index_opq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = emb.filter(F.col("vec_id") >= cut)
     path = scratch.fresh_copy(_opq_base90_index(spark, sf_dir), "opq_append_")
     half = F.pmod(F.col("vec_id"), F.lit(2))
-    ann.opq_index_append(delta.filter(half == 0), path)
-    ann.opq_index_append(delta.filter(half == 1), path)
+    ann.opq_index_append(delta.filter(half == 0), path, "a0")
+    ann.opq_index_append(delta.filter(half == 1), path, "a1")
     _, _, e_opq, e_pq = ann.opq_train_local(base)
     approx = ann.ann_opq_persisted_topk(spark, path, emb, list(range(10)), 5)
     return ann.opq_recall_gate(
@@ -4422,10 +4413,8 @@ def emb_index_opq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetry (PQ got its stream this round too): the id-suffix 10%
     delta replays in three micro-batches; each batch rotates + encodes
     with the FROZEN on-disk artifacts (operators/ann.opq_index_append
-    per micro-batch) and appends to the codes frame. The final ADC scan
-    runs with dedup_codes=True — frozen-artifact encoding is
-    deterministic, so an at-least-once retry re-appends byte-identical
-    rows that one distinct collapses (kill-resume pinned by
+    per micro-batch) and appends one segment under its micro-batch id,
+    so an at-least-once retry is a token no-op (kill-resume pinned by
     test_opq_streaming_kill_resume). Same bound oracle as the batch
     append. Excluded from bench (it measures the replay harness)."""
     from .streaming import replay
@@ -4447,7 +4436,7 @@ def emb_index_opq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             if b.count() == 0:
                 return
-            ann.opq_index_append(b, path)
+            ann.opq_index_append(b, path, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -4459,9 +4448,7 @@ def emb_index_opq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     _, _, e_opq, e_pq = ann.opq_train_local(base)
-    approx = ann.ann_opq_persisted_topk(
-        spark, path, emb, list(range(10)), 5, dedup_codes=True
-    )
+    approx = ann.ann_opq_persisted_topk(spark, path, emb, list(range(10)), 5)
     return ann.opq_recall_gate(
         emb, approx, list(range(10)), 5, opq_err=e_opq, pq_err=e_pq
     )

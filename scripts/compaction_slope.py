@@ -60,7 +60,7 @@ def ivf_state(spark, sf_dir: str, delta_n: int, tag: str) -> str:
         .limit(delta_n)
         .select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label")
     )
-    ann.ivf_index_append_atomic(delta, path, token="d0")
+    ann.ivf_index_append(delta, path, "d0")
     return path
 
 
@@ -83,7 +83,7 @@ def lsh_state(spark, base_dir: str, delta_dirs: list[str], tag: str) -> str:
             "source",
             "n_chars",
         )
-        dedup.lsh_index_append_atomic(d, path, token=f"d{i}")
+        dedup.lsh_index_append(d, path, f"d{i}")
     return path
 
 

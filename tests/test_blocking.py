@@ -208,3 +208,17 @@ def test_jaccard_blocked_kernel_chunking_exact(spark):
         union = len(sets[a] | sets[b])
         exp[(a, b)] = (inter, union, inter / union)
     assert got == exp
+
+
+def test_jaccard_blocked_tiny_chunk_equals_single_chunk(spark, monkeypatch):
+    # the kernel's grouped-cartesian expansion in chunks of 4 index pairs
+    # (hundreds of chunks per task) must give exactly the one-chunk answer
+    rows = [(i, "en", "web", f"w{i % 4} w{(i + 1) % 4} w{(i + 2) % 4} tail{i % 3}") for i in range(60)]
+    df = spark.createDataFrame(rows, "doc_id long, lang string, source string, text string")
+
+    def run():
+        return sorted(tuple(r) for r in dedup.jaccard_blocked(df, n=1).collect())
+
+    one_chunk = run()
+    monkeypatch.setattr(dedup, "_JACCARD_CHUNK_PAIRS", 4)
+    assert run() == one_chunk and len(one_chunk) > 0

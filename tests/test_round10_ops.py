@@ -155,7 +155,7 @@ def test_fresh_copy_isolates_the_shared_build(spark, sf_dir):
     )
     files_before = sorted(str(p) for p in Path(base).rglob("*.parquet"))
     copy = scratch.fresh_copy(base, "iso_copy_")
-    ann.ivf_index_append(emb.filter(F.col("vec_id") < 50), copy)
+    ann.ivf_index_append(emb.filter(F.col("vec_id") < 50), copy, "d1")
     assert sorted(str(p) for p in Path(base).rglob("*.parquet")) == files_before
     assert len(list(Path(copy).rglob("*.parquet"))) > len(files_before)
     # memo revalidates existence: same key returns the same dir
@@ -179,37 +179,30 @@ def test_scratch_root_cleanup():
 
 
 def test_ivf_index_retry_dedup(spark, sf_dir, tmp_path):
-    """A foreachBatch retry re-appends byte-identical rows; the probe
-    with dedup_postings=True must answer exactly like the un-retried
-    index (the relational retry neutralizer)."""
+    """A foreachBatch retry re-appends under the SAME token (its
+    micro-batch id): the second append is a no-op, so the retried index
+    holds no duplicate posting and answers exactly like the un-retried
+    one — deduplicated at write time, with nothing to collapse at read
+    time."""
+    from gmall_flink_20_spark.io_sinks import read_with_segments
+
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
     delta = emb.filter(F.col("vec_id") % 10 == 0)
 
     clean = str(tmp_path / "ivf_clean")
     ann.ivf_index_write(base, clean, nlist=16, train_iters=3)
-    ann.ivf_index_append(delta, clean)
+    ann.ivf_index_append(delta, clean, "b0")
     expected = _ivf_rows(spark, clean, emb)
 
     retried = str(tmp_path / "ivf_retried")
     ann.ivf_index_write(base, retried, nlist=16, train_iters=3)
-    ann.ivf_index_append(delta, retried)
-    ann.ivf_index_append(delta, retried)  # the retry
-    got = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ann.ann_ivf_persisted_topk(
-            spark, retried, emb, list(range(10)), 5, nprobe=4,
-            dedup_postings=True,
-        ).collect()
-    }
-    assert got == expected
-    # and WITHOUT the neutralizer the duplicate rows corrupt the ranks —
-    # proving the dedup is load-bearing, not decorative
-    raw = ann.ann_ivf_persisted_topk(
-        spark, retried, emb, list(range(10)), 5, nprobe=4
-    ).collect()
-    pairs = [(r.query_id, r.neighbor_id) for r in raw]
-    assert len(pairs) != len(set(pairs))
+    assert ann.ivf_index_append(delta, retried, "b0") is True
+    assert ann.ivf_index_append(delta, retried, "b0") is False  # the retry
+    assert _ivf_rows(spark, retried, emb) == expected
+    post = read_with_segments(spark, retried, "postings")
+    assert post.count() == post.select("neighbor_id").distinct().count()
+    assert post.count() == emb.count()
 
 
 # ------------------------------------------------ perceptual hash
@@ -348,7 +341,7 @@ def test_emb_index_streaming_kill_resume(spark, sf_dir, tmp_path):
         try:
             if b.count() == 0:
                 return
-            ann.ivf_index_append(b, idx)
+            ann.ivf_index_append(b, idx, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -374,13 +367,12 @@ def test_emb_index_streaming_kill_resume(spark, sf_dir, tmp_path):
     got = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_ivf_persisted_topk(
-            spark, idx, emb, list(range(10)), 5, nprobe=4,
-            dedup_postings=True,
+            spark, idx, emb, list(range(10)), 5, nprobe=4
         ).collect()
     }
     oneshot = str(tmp_path / "oneshot")
     ann.ivf_index_write(base, oneshot, nlist=16, train_iters=3)
-    ann.ivf_index_append(emb.filter(F.col("vec_id") % 10 == 0), oneshot)
+    ann.ivf_index_append(emb.filter(F.col("vec_id") % 10 == 0), oneshot, "d1")
     exp = _ivf_rows(spark, oneshot, emb)
     assert got == exp and len(got) > 0
 
@@ -475,7 +467,7 @@ def test_phash_index_retry_sees_itself_safely(spark, sf_dir, tmp_path):
         (r.media_id, r.kept)
         for r in multimodal.phash_index_query_incremental(spark, path, new).collect()
     }
-    multimodal.phash_index_append(new, path)  # the batch lands
+    multimodal.phash_index_append(new, path, "b0")  # the batch lands
     # ... and the foreachBatch RETRY re-runs the query with its own
     # rows already in the index
     retry = {
@@ -498,8 +490,8 @@ def test_ivf_pq_append_order_and_compaction_invariant(spark, sf_dir, tmp_path):
     def build(name, parts):
         path = str(tmp_path / name)
         ann.ivf_pq_index_write(base, path)
-        for p in parts:
-            ann.ivf_pq_index_append(p, path)
+        for i, p in enumerate(parts):
+            ann.ivf_pq_index_append(p, path, f"p{i}")
         return path
 
     whole = build("pq_whole", [delta])
@@ -514,7 +506,9 @@ def test_ivf_pq_append_order_and_compaction_invariant(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert q(whole) == q(halves) and len(q(whole)) > 0
-    files_before = len(list(Path(f"{halves}/postings").rglob("*.parquet")))
+    files_before = len(list(Path(halves).glob("postings/**/*.parquet"))) + len(
+        list(Path(halves).glob("seg_*/postings/**/*.parquet"))
+    )
     n_after = ann.ivf_index_compact(spark, halves)
     assert n_after < files_before
     assert q(halves) == q(whole)

@@ -200,14 +200,15 @@ def test_staged_segment_is_invisible_until_commit(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf")
     ann.ivf_index_write(base, path, nlist=16, train_iters=3)
     pre = _ivf_rows(spark, path, emb)
-    ann.ivf_index_append_atomic(delta, path, token="t1", commit=False)
+    ann.ivf_index_append(delta, path, "t1", commit=False)
     assert _ivf_rows(spark, path, emb) == pre  # in-flight: invisible
     io_sinks.commit_segment(path, "t1")
     post = _ivf_rows(spark, path, emb)
-    # the committed segment must equal a plain in-place append
+    assert io_sinks.read_with_segments(spark, path, "postings").count() == emb.count()
+    # the two-phase commit must equal a one-phase append
     path2 = str(tmp_path / "ivf2")
     ann.ivf_index_write(base, path2, nlist=16, train_iters=3)
-    ann.ivf_index_append(delta, path2)
+    ann.ivf_index_append(delta, path2, "t1")
     assert post == _ivf_rows(spark, path2, emb)
 
 
@@ -221,7 +222,7 @@ def test_compact_absorbs_segments_and_purges(spark, sf_dir, tmp_path):
     delta = emb.filter(F.col("vec_id") % 10 == 9)
     path = str(tmp_path / "ivf")
     ann.ivf_index_write(base, path, nlist=16, train_iters=3)
-    ann.ivf_index_append_atomic(delta, path, token="t1")
+    ann.ivf_index_append(delta, path, "t1")
     before = _ivf_rows(spark, path, emb)
     ann.ivf_index_compact(spark, path)
     assert _ivf_rows(spark, path, emb) == before  # result-invariant
@@ -243,7 +244,7 @@ def test_reader_skips_absorbed_segment_left_by_crash(spark, sf_dir, tmp_path):
     delta = emb.filter(F.col("vec_id") % 10 == 9)
     path = str(tmp_path / "ivf")
     ann.ivf_index_write(base, path, nlist=16, train_iters=3)
-    ann.ivf_index_append_atomic(delta, path, token="t1")
+    ann.ivf_index_append(delta, path, "t1")
     saved = str(tmp_path / "seg_saved")
     shutil.copytree(f"{path}/seg_t1", saved)
     before = _ivf_rows(spark, path, emb)
@@ -271,14 +272,14 @@ def test_lsh_segment_publishes_both_frames_atomically(spark, sf_dir, tmp_path):
         for r in dedup.lsh_index_query_incremental(spark, path, query).collect()
     }
     pre = rows()
-    dedup.lsh_index_append_atomic(delta, path, token="t1", commit=False)
+    dedup.lsh_index_append(delta, path, "t1", commit=False)
     assert rows() == pre
     io_sinks.commit_segment(path, "t1")
     post = rows()
-    # equals a plain two-frame append
+    # both frames are row-local, so base + the committed segment must
+    # answer like an index written over base ∪ delta in one go
     path2 = str(tmp_path / "lsh2")
-    dedup.lsh_index_write(base, path2)
-    dedup.lsh_index_append(delta, path2)
+    dedup.lsh_index_write(base.unionByName(delta), path2)
     post2 = {
         (r.doc_id, r.kept)
         for r in dedup.lsh_index_query_incremental(spark, path2, query).collect()
@@ -306,13 +307,13 @@ def test_phash_segment_append_atomic(spark, sf_dir, tmp_path):
     }
     pre = rows()
     dh = mm.image_dhash(mm.encode_media(delta))
-    mm.phash_index_append_atomic(dh, path, token="t1", commit=False)
+    mm.phash_index_append(dh, path, "t1", commit=False)
     assert rows() == pre
     io_sinks.commit_segment(path, "t1")
     post = rows()
+    # equals an index written over base ∪ delta in one go
     path2 = str(tmp_path / "ph2")
-    mm.phash_index_write(mm.image_dhash(mm.encode_media(base)), path2)
-    mm.phash_index_append(dh, path2)
+    mm.phash_index_write(mm.image_dhash(mm.encode_media(base.unionByName(delta))), path2)
     post2 = {
         (r.media_id, r.kept)
         for r in mm.phash_index_query_incremental(spark, path2, qh).collect()

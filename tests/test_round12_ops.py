@@ -187,7 +187,7 @@ def test_concurrent_appenders_threads(spark, sf_dir, tmp_path):
 
     def writer(j: int) -> None:
         try:
-            ann.ivf_index_append_atomic(halves[j], path, token=f"t{j}")
+            ann.ivf_index_append(halves[j], path, f"t{j}")
         except Exception as e:  # noqa: BLE001
             errs.append(e)
 
@@ -204,7 +204,7 @@ def test_concurrent_appenders_threads(spark, sf_dir, tmp_path):
         ).collect()
     }
     serial = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_ser_")
-    ann.ivf_index_append(delta, serial)
+    ann.ivf_index_append(delta, serial, "d1")
     exp = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_ivf_persisted_topk(
@@ -230,7 +230,7 @@ def test_ivf_incremental_leaves_cold_cells_untouched(spark, sf_dir, tmp_path):
         if cell.startswith("list_id=")
     }
     one = delta.orderBy("vec_id").limit(1)
-    ann.ivf_index_append_atomic(one, path, token="b0")
+    ann.ivf_index_append(one, path, "b0")
     victims = set(
         ann.ivf_index_compact_incremental(spark, path, max_fragments=1)
     )
@@ -266,7 +266,7 @@ def test_lsh_incremental_leaves_shingles_untouched(spark, sf_dir, tmp_path):
         if fn.endswith(".parquet")
     )
     s1 = docs.filter(shard == 1)
-    dedup.lsh_index_append_atomic(s1, path, token="a0")
+    dedup.lsh_index_append(s1, path, "a0")
     victims = dedup.lsh_index_compact_incremental(spark, path, max_fragments=1)
     assert victims == [f"band_id={b}" for b in range(4)]
     after = sorted(
@@ -283,8 +283,8 @@ def test_pq_streaming_kill_resume(spark, sf_dir, tmp_path):
     """Checkpointed restart mid-ingest for the COMPRESSED index
     (VERDICT r11 item 5): half the delta lands, the run ends, the rest
     arrives, a second run resumes from the checkpoint — the grown PQ
-    index must answer exactly like the one-shot batch append, with
-    dedup_postings collapsing any at-least-once re-encode."""
+    index must answer exactly like the one-shot batch append (each
+    micro-batch appends under its own id, so a replay is a no-op)."""
     import shutil
     import uuid
 
@@ -323,7 +323,7 @@ def test_pq_streaming_kill_resume(spark, sf_dir, tmp_path):
         try:
             if b.count() == 0:
                 return
-            ann.ivf_pq_index_append(b, idx)
+            ann.ivf_pq_index_append(b, idx, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -349,13 +349,12 @@ def test_pq_streaming_kill_resume(spark, sf_dir, tmp_path):
     got = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_ivf_pq_persisted_topk(
-            spark, idx, emb, list(range(10)), 5, nprobe=4,
-            dedup_postings=True,
+            spark, idx, emb, list(range(10)), 5, nprobe=4
         ).collect()
     }
     oneshot = str(tmp_path / "oneshot")
     ann.ivf_pq_index_write(base, oneshot)
-    ann.ivf_pq_index_append(emb.filter(F.col("vec_id") >= cut), oneshot)
+    ann.ivf_pq_index_append(emb.filter(F.col("vec_id") >= cut), oneshot, "d1")
     exp = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_ivf_pq_persisted_topk(
@@ -594,8 +593,9 @@ def test_session_late_event_beyond_watermark_drops(spark, tmp_path):
 
 def test_opq_streaming_kill_resume(spark, sf_dir, tmp_path):
     """Checkpointed restart mid-ingest for the OPQ index: the grown
-    codes frame must answer exactly like the one-shot batch append,
-    dedup_codes collapsing any at-least-once re-encode."""
+    codes frame must answer exactly like the one-shot batch append
+    (each micro-batch appends under its own id, so a replay is a
+    no-op)."""
     import shutil
     import uuid
 
@@ -634,7 +634,7 @@ def test_opq_streaming_kill_resume(spark, sf_dir, tmp_path):
         try:
             if b.count() == 0:
                 return
-            ann.opq_index_append(b, idx)
+            ann.opq_index_append(b, idx, f"b{epoch_id}")
         finally:
             b.unpersist()
 
@@ -660,12 +660,12 @@ def test_opq_streaming_kill_resume(spark, sf_dir, tmp_path):
     got = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_opq_persisted_topk(
-            spark, idx, emb, list(range(10)), 5, dedup_codes=True
+            spark, idx, emb, list(range(10)), 5
         ).collect()
     }
     oneshot = str(tmp_path / "oneshot")
     ann.opq_index_write(base, oneshot)
-    ann.opq_index_append(emb.filter(F.col("vec_id") >= cut), oneshot)
+    ann.opq_index_append(emb.filter(F.col("vec_id") >= cut), oneshot, "d1")
     exp = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_opq_persisted_topk(
@@ -694,13 +694,14 @@ def test_opq_atomic_append_invisible_until_commit(spark, sf_dir, tmp_path):
         }
 
     pre = q()
-    ann.opq_index_append_atomic(delta, idx, token="t1", commit=False)
+    ann.opq_index_append(delta, idx, "t1", commit=False)
     assert q() == pre  # staged: invisible
     io_sinks.commit_segment(idx, "t1")
     post = q()
+    # the two-phase commit must equal a one-phase append
     idx2 = str(tmp_path / "opq2")
     ann.opq_index_write(base, idx2)
-    ann.opq_index_append(delta, idx2)
+    ann.opq_index_append(delta, idx2, "t1")
     exp = {
         (r.query_id, r.neighbor_id, r.rank)
         for r in ann.ann_opq_persisted_topk(
@@ -807,7 +808,7 @@ def test_ivf_full_compact_purges_stale_stage(spark, sf_dir, tmp_path):
 
     _, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_stale_")
-    ann.ivf_index_append_atomic(delta, path, token="dead", commit=False)
+    ann.ivf_index_append(delta, path, "dead", commit=False)
     assert os.path.isdir(io_sinks.stage_segment_dir(path, "dead"))
     ann.ivf_index_compact(spark, path)
     assert not os.path.isdir(io_sinks.stage_segment_dir(path, "dead"))

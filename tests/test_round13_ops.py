@@ -267,7 +267,7 @@ def test_interleaved_compactors_fence(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     shard = F.pmod(sampling.sample_hash("doc_id", "incr"), F.lit(4))
     path = scratch.fresh_copy(_lsh_base_index(spark, sf_dir, (2, 3)), "lsh_fence_t_")
-    dedup.lsh_index_append(docs.filter(shard == 1), path)
+    dedup.lsh_index_append(docs.filter(shard == 1), path, "a1")
     baseline = {
         tuple(r)
         for r in dedup.lsh_index_query_incremental(
@@ -325,8 +325,8 @@ def test_merge_segment_frames_invariant_and_atomic(spark, sf_dir):
     path = scratch.fresh_copy(_lsh_base_index(spark, sf_dir, (2, 3)), "lsh_merge_t_")
     s1 = docs.filter(shard == 1)
     half = F.pmod(F.col("doc_id"), F.lit(2))
-    dedup.lsh_index_append_atomic(s1.filter(half == 0), path, token="a0")
-    dedup.lsh_index_append_atomic(s1.filter(half == 1), path, token="a1")
+    dedup.lsh_index_append(s1.filter(half == 0), path, "a0")
+    dedup.lsh_index_append(s1.filter(half == 1), path, "a1")
     q = lambda: {  # noqa: E731
         tuple(r)
         for r in dedup.lsh_index_query_incremental(

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from gmall_flink_20_spark import io_sinks
 from gmall_flink_20_spark.io import load_table
 from gmall_flink_20_spark.operators import ann
 
@@ -265,7 +266,7 @@ def test_two_stream_temporal_join_equals_one_stream(spark, sf_dir):
 
 
 def test_media_runtime_gated_on_pil():
-    """Mirror of test_tws_runtime_gated_on_protobuf (VERDICT r8 item 6):
+    """Environment canary (VERDICT r8 item 6):
     the JPEG decode tier (multimodal.py) is honestly NotImplementedError
     because PIL is absent. If this test ever FAILS, PIL has appeared in
     the environment — wire the real decode into _decode_batch /
@@ -309,8 +310,8 @@ def test_ivf_index_append_order_invariant(spark, sf_dir):
     def build(chunks):
         path = tempfile.mkdtemp(prefix="ivf_app_t_") + "/index"
         ann.ivf_index_write(base, path, nlist=16, train_iters=3)
-        for c in chunks:
-            ann.ivf_index_append(c, path)
+        for i, c in enumerate(chunks):
+            ann.ivf_index_append(c, path, f"c{i}")
         return {
             (r.query_id, r.neighbor_id, r.rank)
             for r in ann.ann_ivf_persisted_topk(
@@ -337,8 +338,8 @@ def test_ivf_index_append_covers_delta(spark, sf_dir):
     base, delta = emb.filter(split != 0), emb.filter(split == 0)
     path = tempfile.mkdtemp(prefix="ivf_app_c_") + "/index"
     ann.ivf_index_write(base, path, nlist=16, train_iters=3)
-    ann.ivf_index_append(delta, path)
-    post = spark.read.parquet(f"{path}/postings")
+    ann.ivf_index_append(delta, path, "d1")
+    post = io_sinks.read_with_segments(spark, path, "postings")
     assert post.count() == emb.count()
     n_delta = delta.count()
     assert n_delta > 0
@@ -352,7 +353,6 @@ def test_ivf_index_compact_is_result_invariant(spark, sf_dir):
     """3 appends leave multiple files per touched cell; compaction must
     drop to one file per cell and change NOTHING about query answers."""
     import tempfile
-    from pathlib import Path as _P
 
     from gmall_flink_20_spark.operators import sampling
 
@@ -363,14 +363,14 @@ def test_ivf_index_compact_is_result_invariant(spark, sf_dir):
     ann.ivf_index_write(base, path, nlist=16, train_iters=3)
     third = F.pmod(F.col("vec_id"), F.lit(3))
     for j in range(3):
-        ann.ivf_index_append(delta.filter(third == j), path)
+        ann.ivf_index_append(delta.filter(third == j), path, f"b{j}")
 
     def files_per_cell():
-        cells = {}
-        for f in _P(f"{path}/postings").rglob("*.parquet"):
-            cells.setdefault(f.parent.name, 0)
-            cells[f.parent.name] += 1
-        return cells
+        # base cell files plus every live segment's copy of the cell
+        return io_sinks.cell_fragment_counts(path, "postings")
+
+    def n_rows():
+        return io_sinks.read_with_segments(spark, path, "postings").count()
 
     def answers():
         return {
@@ -383,11 +383,11 @@ def test_ivf_index_compact_is_result_invariant(spark, sf_dir):
     before_files = files_per_cell()
     assert max(before_files.values()) > 1, "appends must fragment cells"
     before = answers()
-    n_rows = spark.read.parquet(f"{path}/postings").count()
+    rows_before = n_rows()
     n = ann.ivf_index_compact(spark, path)
     after_files = files_per_cell()
     assert n == len(after_files) and set(after_files.values()) == {1}
-    assert spark.read.parquet(f"{path}/postings").count() == n_rows
+    assert n_rows() == rows_before
     assert answers() == before
 
 
@@ -499,7 +499,7 @@ def test_lsh_index_retry_sees_itself_safely(spark, sf_dir):
         for r in dedup.lsh_index_query_incremental(spark, path, new).collect()
     }
     # simulate the crashed-after-append retry: the batch is IN the index
-    dedup.lsh_index_append(new, path)
+    dedup.lsh_index_append(new, path, "b0")
     retry = {
         (r.doc_id, r.kept)
         for r in dedup.lsh_index_query_incremental(spark, path, new).collect()
@@ -520,11 +520,20 @@ def test_lsh_index_compact_reduces_files_invariantly(spark, sf_dir):
     dedup.lsh_index_write(docs.filter(shard.isin(2, 3)), path)
     s1 = docs.filter(shard == 1)
     half = F.pmod(F.col("doc_id"), F.lit(2))
-    dedup.lsh_index_append(s1.filter(half == 0), path)
-    dedup.lsh_index_append(s1.filter(half == 1), path)
+    dedup.lsh_index_append(s1.filter(half == 0), path, "a0")
+    dedup.lsh_index_append(s1.filter(half == 1), path, "a1")
 
     def nfiles(sub):
-        return sum(1 for _ in _P(f"{path}/{sub}").rglob("*.parquet"))
+        # the frame's base files plus every segment's copy of it
+        return sum(1 for _ in _P(path).glob(f"{sub}/**/*.parquet")) + sum(
+            1 for _ in _P(path).glob(f"seg_*/{sub}/**/*.parquet")
+        )
+
+    def nrows():
+        return tuple(
+            io_sinks.read_with_segments(spark, path, fr).count()
+            for fr in ("bands", "shingles")
+        )
 
     def answers():
         return {
@@ -536,16 +545,10 @@ def test_lsh_index_compact_reduces_files_invariantly(spark, sf_dir):
 
     before = (nfiles("bands"), nfiles("shingles"))
     exp = answers()
-    rows_before = (
-        spark.read.parquet(f"{path}/bands").count(),
-        spark.read.parquet(f"{path}/shingles").count(),
-    )
+    rows_before = nrows()
     total = dedup.lsh_index_compact(spark, path)
     assert nfiles("bands") == 4 and nfiles("bands") < before[0]
     assert nfiles("shingles") <= before[1]
     assert total == nfiles("bands") + nfiles("shingles")
-    assert (
-        spark.read.parquet(f"{path}/bands").count(),
-        spark.read.parquet(f"{path}/shingles").count(),
-    ) == rows_before
+    assert nrows() == rows_before
     assert answers() == exp

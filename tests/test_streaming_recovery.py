@@ -611,7 +611,7 @@ def test_lsh_index_stream_recovers_from_checkpoint(spark, sf_dir):
             if b.count() == 0:
                 return
             store.upsert(dedup.lsh_index_query_incremental(spark, idx, b), epoch_id)
-            dedup.lsh_index_append(b, idx)
+            dedup.lsh_index_append(b, idx, f"b{epoch_id}")
         finally:
             b.unpersist()
 
