@@ -416,10 +416,10 @@ def main() -> None:
     # driver's capture window and the round's bench was recorded as
     # parsed:null (VERDICT.md r2 "What's wrong" item 1).
     detail = {
-        # VERDICT r11 item 8: this file is ONE bench.py leg. The round
-        # headline is per-query best-of-all-legs, committed as
-        # BENCH_BESTOF_r{N}.json — diff THAT round-over-round, not this.
-        "source": "single bench.py leg; round headline = BENCH_BESTOF_r{N}.json (best-of-legs)",
+        # this file is ONE bench.py leg. Change-over-change comparison
+        # is perfbench's job (BENCHMARK.json, perfbench/baseline.json);
+        # no per-round best-of-legs file is kept any more.
+        "source": "single bench.py leg; change-over-change baseline = perfbench",
         "metric": "total_query_runtime",
         "value": total,
         "unit": "sec",

@@ -1677,11 +1677,16 @@ def lsh_index_query_incremental(
     byte-equal to running neardup_incremental over base ∪ new with the
     same parameters (the shared oracle proves it).
 
+    With ``parallelism`` set (a bulk shard) the answer is computed before
+    the call returns, into session scratch space, and the shard frame
+    persisted for it is released; without it the frame is lazy.
+
     Reader-side crash recovery: a compactor that died mid-swap leaves
     bands/ or shingles/ absent with the intact original under the
     ``*_pre_compact`` name — restored here before reading (restore-only;
     destructive cleanup stays with the single-writer compactor)."""
     from ..io_sinks import heal_missing_cells, heal_missing_src, read_with_segments
+    from ..scratch import scratch_dir
 
     heal_missing_src(f"{path}/bands")
     heal_missing_src(f"{path}/shingles")
@@ -1690,7 +1695,7 @@ def lsh_index_query_incremental(
     # and its shingle sets (the verify operand) come from one combined
     # pass — persisted on the bulk path, split on the per-micro-batch
     # streaming path (see _sig_shingle_frames)
-    sig, new_sh, _cleanup = _sig_shingle_frames(
+    sig, new_sh, cleanup = _sig_shingle_frames(
         new_df, n, num_hashes, text_col, id_col, parallelism
     )
     nb = band_keys(sig, bands, rows_per_band, id_col).select(
@@ -1743,7 +1748,7 @@ def lsh_index_query_incremental(
         .distinct()
         .withColumn("_d", F.lit(1))
     )
-    return (
+    out = (
         new_df.select(F.col(id_col))
         .join(dropped, id_col, "left")
         .select(
@@ -1754,6 +1759,18 @@ def lsh_index_query_incremental(
             .alias("kept"),
         )
     )
+    if not parallelism:
+        return out  # split lineages: nothing was persisted
+    # bulk path: every branch above reads the persisted combined pass.
+    # Run the result now into session scratch space and release the
+    # persist; the frame handed back reads only those files, so it
+    # neither pins the cache nor recomputes the combined pass later
+    dst = scratch_dir("lsh_query_")
+    try:
+        out.write.mode("overwrite").parquet(dst)
+    finally:
+        cleanup()
+    return spark.read.parquet(dst)
 
 
 def lsh_index_append(

@@ -12,6 +12,18 @@ multi-executor cluster too:
 - ``nanosAsLong`` so the driver's nanosecond-precision ``events`` parquet is
   readable (Spark has no ns timestamp type; ``io.load_table`` converts)
 - Arrow enabled for the Pandas-UDF slow path
+- a whole-stage codegen cache that holds the registry's working set.
+  Spark keeps compiled classes in an LRU of
+  ``spark.sql.codegen.cache.maxEntries`` (default 100). A workload that
+  cycles through more distinct classes than an LRU holds misses on every
+  access: each class is evicted before it comes round again, so every
+  pass pays Janino compilation and then the JVM's JIT for the fresh
+  classes. One pass of the 14 reference analytics over 100k events
+  compiles about 145 classes cold and, at the default, 132 again on
+  every repeat pass; with ``CODEGEN_CACHE_ENTRIES`` a repeat pass
+  compiles none. One cold pass over the whole registry generates 4,130
+  distinct classes. The conf is static: it only takes effect on a
+  session created here.
 """
 
 from __future__ import annotations
@@ -21,6 +33,11 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+
+# Compiled classes kept by Spark's codegen cache: about twice the 4,130
+# distinct classes one pass over the whole registry generates.
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def _cpus() -> str:
@@ -58,6 +75,8 @@ def get_spark(
         # Small-dim broadcast threshold: generous — dims here are tiny, and
         # at 100 TB the dims (nation/region/part) still fit comfortably.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # static conf: sized to the registry's working set (see docstring)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

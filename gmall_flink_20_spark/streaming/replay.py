@@ -16,16 +16,20 @@ docstring).
 from __future__ import annotations
 
 import contextlib
+import logging
 import os
 import shutil
 import tempfile
 import uuid
 from pathlib import Path
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["replay_stream", "run_to_completion", "flush_sentinel", "sentinel_pair"]
+
+log = logging.getLogger("gmall_flink_20_spark")
 
 
 def _max_row(template_df: DataFrame, ts_col: str) -> dict:
@@ -38,32 +42,35 @@ def _max_row(template_df: DataFrame, ts_col: str) -> dict:
     )
 
 
-def _sentinel_from(
+def _sentinels_from(
     spark: SparkSession,
     template_df: DataFrame,
     row: dict,
     ts_col: str,
-    days: int,
+    days: tuple[int, ...],
     overrides: dict | None,
-) -> DataFrame:
+) -> list[DataFrame]:
+    """One sentinel frame per entry of ``days``, all from ``row``."""
     from datetime import datetime, timezone
 
-    row = dict(row)
-    max_ts = row[ts_col]
-    future = datetime.fromtimestamp(
-        max_ts.replace(tzinfo=timezone.utc).timestamp() + days * 86400, tz=timezone.utc
-    ).replace(tzinfo=None)
-    row[ts_col] = future
-    if "ts_s" in row:
-        row["ts_s"] = int(future.replace(tzinfo=timezone.utc).timestamp())
-    if "event_type" in row:
-        row["event_type"] = "noop"  # inert: matches no operator branch
-    if "event_id" in row:
-        row["event_id"] = 10**12 + days
-    if "user_id" in row:
-        row["user_id"] = -1  # reserved sentinel key
-    for k, v in (overrides or {}).items():
-        row[k] = v
+    rows = []
+    for d in days:
+        r = dict(row)
+        future = datetime.fromtimestamp(
+            row[ts_col].replace(tzinfo=timezone.utc).timestamp() + d * 86400,
+            tz=timezone.utc,
+        ).replace(tzinfo=None)
+        r[ts_col] = future
+        if "ts_s" in r:
+            r["ts_s"] = int(future.replace(tzinfo=timezone.utc).timestamp())
+        if "event_type" in r:
+            r["event_type"] = "noop"  # inert: matches no operator branch
+        if "event_id" in r:
+            r["event_id"] = 10**12 + d
+        if "user_id" in r:
+            r["user_id"] = -1  # reserved sentinel key
+        r.update(overrides or {})
+        rows.append(r)
     # r14 (guide §4/§5: keep the driver out of the Python boundary): the
     # one-row frame is built as JVM LITERALS over range(1), not
     # createDataFrame([row]) — the latter parallelizes the row across
@@ -72,15 +79,26 @@ def _sentinel_from(
     # round-trips in one task (measured 5-6 s per sentinel write at
     # local[32]; the literal form writes in <0.2 s). Values are the same
     # row, cast to the template's exact types.
+    fields = template_df.schema.fields
     try:
-        cols = [
-            F.lit(row[f.name]).cast(f.dataType).alias(f.name)
-            for f in template_df.schema.fields
+        return [
+            spark.range(1).select(
+                *[F.lit(r[f.name]).cast(f.dataType).alias(f.name) for f in fields]
+            )
+            for r in rows
         ]
-        return spark.range(1).select(*cols)
-    except Exception:
-        # non-literal-able column type: the original row-parallelize path
-        return spark.createDataFrame([row], template_df.schema)
+    except SparkRuntimeException as e:
+        if e.getCondition() != "UNSUPPORTED_FEATURE.LITERAL_TYPE":
+            raise
+    # a value Spark has no literal for (a struct or map): the
+    # row-parallelize path, slow but exact
+    log.warning(
+        "flush sentinel: no literal for a column of %s; building %d "
+        "sentinel(s) with createDataFrame (slow path)",
+        template_df.schema.simpleString(),
+        len(rows),
+    )
+    return [spark.createDataFrame([r], template_df.schema) for r in rows]
 
 
 def flush_sentinel(
@@ -104,7 +122,8 @@ def flush_sentinel(
     (hasTimedOut) path. ``overrides`` force other columns (e.g. the key
     column of a differently-keyed stream) onto reserved values."""
     row = _max_row(template_df, ts_col)
-    return _sentinel_from(spark, template_df, row, ts_col, days, overrides)
+    (s,) = _sentinels_from(spark, template_df, row, ts_col, (days,), overrides)
+    return s
 
 
 def sentinel_pair(
@@ -127,8 +146,7 @@ def sentinel_pair(
     cutoff_s = (
         int(row[ts_col].replace(tzinfo=timezone.utc).timestamp()) + 86400
     )
-    s1 = _sentinel_from(spark, template_df, row, ts_col, days[0], overrides)
-    s2 = _sentinel_from(spark, template_df, row, ts_col, days[1], overrides)
+    s1, s2 = _sentinels_from(spark, template_df, row, ts_col, days, overrides)
     return s1, s2, cutoff_s
 
 

@@ -1,10 +1,15 @@
-"""Merge bench legs into the round's best-of frame (round 12+).
+"""Merge bench legs into one best-of frame.
+
+The per-round ``BENCH_BESTOF_r{N}.json`` files it wrote for r11 and r12
+are no longer written: perfbench (BENCHMARK.json) is the
+change-over-change baseline. The script stays for ad-hoc multi-leg
+comparisons.
 
 Each Spark leg is a bench.py run (BENCH_DETAIL.json snapshotted to a
 leg file); each oracle leg a scripts/pair_bench.py run
 (BENCH_ORACLE_DETAIL.json snapshotted likewise). This script folds any
-number of either into BENCH_BESTOF_r{N}.json with the same shape the
-round-11 frame established:
+number of either into OUT.json with the same shape the round-11 frame
+established:
 
   { "spark_best":     {query: min sec over Spark legs},
     "oracle_best":    {query: min sec over oracle legs},

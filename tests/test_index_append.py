@@ -2,7 +2,8 @@
 per writer, and re-running a token the index has already seen is a
 no-op that launches no Spark job and touches no file — after the
 segment committed, after a full compaction purged it, and after an
-incremental compaction left it partially absorbed."""
+incremental compaction left it partially absorbed. Also: the bulk
+incremental query releases the frame it persists."""
 
 from __future__ import annotations
 
@@ -242,3 +243,19 @@ def test_token_seen_covers_segment_absorbed_and_superseded(tmp_path):
     assert os.path.isdir(f"{root}/seg_fresh/postings")
     assert io_sinks.append_segment(root, "fresh", frames, stage) is False
     assert len(calls) == 1
+
+
+# ---------------------------------------------------- bulk query persist
+
+
+def test_bulk_incremental_query_releases_its_persist(spark, sf_dir):
+    """The bulk LSH query persists the shard's combined signature and
+    shingle pass; once the caller has its result, no cached frame the
+    call created is left behind in the session."""
+    from gmall_flink_20_spark.queries import QUERIES
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    got = QUERIES["docs_lsh_index_compact_incremental"](spark, sf_dir).toPandas()
+    assert len(got) > 0
+    assert set(jsc.getPersistentRDDs().keys()) <= before

@@ -410,3 +410,42 @@ def test_bucketed_state_equals_per_key(spark, small_events):
         per_key = run(op, 0, **kw)
         sharded = run(op, 7, **kw)  # deliberately small, non-default B
         assert sharded == per_key and per_key  # non-empty, identical
+
+
+def test_sentinel_unsupported_literal_falls_back_and_logs_once(spark, caplog):
+    """A column type Spark has no literal for (a map) takes the
+    createDataFrame path, and says so once for both sentinels."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("user_id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("tags", T.MapType(T.StringType(), T.LongType())),
+        ]
+    )
+    ev = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1), {"a": 1}), (2, datetime(2024, 1, 2), {"b": 2})],
+        schema,
+    )
+    with caplog.at_level("WARNING", logger="gmall_flink_20_spark"):
+        s1, s2, _ = replay.sentinel_pair(spark, ev)
+    (r1,) = s1.collect()
+    assert r1["user_id"] == -1 and r1["tags"] == {"b": 2}
+    assert r1["ts"] == datetime(2024, 2, 1)
+    assert s2.collect()[0]["ts"] == datetime(2024, 2, 2)
+    records = [r for r in caplog.records if r.name == "gmall_flink_20_spark"]
+    assert len(records) == 1, [r.getMessage() for r in records]
+
+
+def test_sentinel_other_errors_propagate(spark, small_events, monkeypatch):
+    """Only an unsupported literal takes the slow path: any other error
+    on the literal path is raised, not hidden behind the fallback."""
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("broken literal path")
+
+    ev = small_events.select("user_id", "event_id", "event_type", "ts")
+    monkeypatch.setattr(spark, "range", broken)
+    with pytest.raises(RuntimeError, match="broken literal path"):
+        replay.flush_sentinel(spark, ev)
