@@ -1,11 +1,20 @@
-"""Sinks (SURVEY §2.12 noted the reference has none beyond print/Redis;
-these are the production-shaped equivalents).
+"""Sinks and the persisted-index storage layer (SURVEY §2.12 noted the
+reference has none beyond print/Redis; these are the production-shaped
+equivalents).
 
 - batch: partitioned/bucketed parquet writers (the physical layout knobs
   that make 100 TB re-reads cheap: partition pruning + co-located joins)
-- streaming: console/memory/parquet sinks and a foreachBatch fan-out that
-  routes a discriminated union (side-output column, SURVEY §2.9) to
-  multiple destinations in one pass
+- streaming: a foreachBatch fan-out that routes a discriminated union
+  (side-output column, SURVEY §2.9) to multiple destinations in one pass
+- index storage, shared by every persisted-index family (IVF, IVF-PQ,
+  OPQ, LSH, phash): each family declares its LAYOUT once — a dict from
+  frame name to that frame's hive partition column, None for an
+  unpartitioned frame — and this module owns everything else. Appends
+  are atomic, token-idempotent segments (``append_segment``); readers
+  fold the live segments in and restore a crashed swap on the way
+  (``read_with_segments``); one full compaction (``compact_index``)
+  and one incremental compaction (``compact_index_incremental``) serve
+  every layout, fenced by the single-writer maintenance lease.
 """
 
 from __future__ import annotations
@@ -21,15 +30,12 @@ __all__ = [
     "write_bucketed",
     "write_zordered",
     "compact_small_files",
-    "swap_compacted",
     "heal_missing_src",
     "heal_compaction_site",
     "maintenance_lease",
     "acquire_maintenance_lease",
     "release_maintenance_lease",
     "MaintenanceLeaseHeld",
-    "console_sink",
-    "parquet_sink",
     "side_output_fanout",
     "stage_segment_dir",
     "commit_segment",
@@ -39,21 +45,20 @@ __all__ = [
     "committed_segments",
     "read_with_segments",
     "read_segments_pinned",
-    "write_absorbed_marker",
     "merge_segment_frames",
     "superseded_tokens",
-    "purge_absorbed_segments",
     "purge_stale_stage_dirs",
     "cell_fragment_counts",
     "compact_cells_incremental",
     "heal_missing_cells",
-    "heal_cell_sites",
+    "compact_index",
+    "compact_index_incremental",
 ]
 
-# Compaction-swap naming convention shared by the index compactors
-# (operators/ann.ivf_index_compact, operators/dedup.lsh_index_compact):
-# the rewrite lands in <src>_compacting, then swap_compacted renames
-# <src> -> <src>_pre_compact and <src>_compacting -> <src> back-to-back.
+# Compaction-swap naming convention of the full compactor
+# (compact_index): the rewrite lands in <src>_compacting, then
+# swap_compacted renames <src> -> <src>_pre_compact and
+# <src>_compacting -> <src> back-to-back.
 _PRE_SUFFIX = "_pre_compact"
 _TMP_SUFFIX = "_compacting"
 
@@ -423,22 +428,6 @@ def compact_small_files(
     return n_files
 
 
-def console_sink(stream: DataFrame, mode: str = "append") -> DataStreamWriter:
-    """The reference's ``print()`` (HotItemApp.java:68)."""
-    return stream.writeStream.format("console").outputMode(mode)
-
-
-def parquet_sink(
-    stream: DataFrame, path: str, checkpoint: str, partition_by: list[str] | None = None
-) -> DataStreamWriter:
-    w = stream.writeStream.format("parquet").option("path", path).option(
-        "checkpointLocation", checkpoint
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    return w
-
-
 def side_output_fanout(
     stream: DataFrame,
     discriminator: str,
@@ -682,15 +671,14 @@ def _has_data_files(d: str) -> bool:
     )
 
 
-def _read_segments(spark, root: str, frame: str, pairs) -> DataFrame:
-    """Base frame + the given (token, frame_subdir) segment branches,
-    with cell-level absorbed exclusions applied per branch; branches
-    without data files (empty batches) are skipped."""
+def _segment_branches(spark, root: str, frame: str, pairs) -> list[DataFrame]:
+    """One frame per given (token, frame_subdir) segment branch, with
+    the base frame's cell-level absorbed exclusions applied per branch;
+    branches without data files (empty batches) are skipped."""
     from pyspark.sql import functions as F
 
-    base_dir = f"{root}/{frame}"
-    df = spark.read.parquet(base_dir)
-    cell_abs = _cell_absorbed_map(base_dir)
+    cell_abs = _cell_absorbed_map(f"{root}/{frame}")
+    out = []
     for token, sub in pairs:
         if not _has_data_files(sub):
             continue
@@ -700,6 +688,14 @@ def _read_segments(spark, root: str, frame: str, pairs) -> DataFrame:
             # exclusion on the PARTITION column: still prunes per branch
             col, vals = _cell_values(cells)
             seg = seg.filter(~F.col(col).isin(vals))
+        out.append(seg)
+    return out
+
+
+def _read_segments(spark, root: str, frame: str, pairs) -> DataFrame:
+    """Base frame unioned with the given segment branches."""
+    df = spark.read.parquet(f"{root}/{frame}")
+    for seg in _segment_branches(spark, root, frame, pairs):
         df = df.unionByName(seg)
     return df
 
@@ -708,10 +704,19 @@ def read_with_segments(spark, root: str, frame: str) -> DataFrame:
     """The segment-aware reader: the base frame unioned with every
     committed, not-yet-absorbed segment's copy of it. Each load keeps
     its own FileIndex, so hive partition filters prune per branch; with
-    no segments this is exactly the plain read plus one listdir. Cells
-    the incremental compactor already folded into the base are excluded
-    from their segment branches (cell-level markers), so no row is ever
-    visible twice at any crash point."""
+    no segments this is exactly the plain read plus a few listdirs.
+    Cells the incremental compactor already folded into the base are
+    excluded from their segment branches (cell-level markers), so no
+    row is ever visible twice at any crash point.
+
+    Reader-side crash recovery, restore-only, runs first: a compactor
+    that died between the two renames of a frame swap or of a cell swap
+    left the intact original under its parked name, and this reader
+    renames it back (``heal_missing_src``, ``heal_missing_cells``).
+    Destructive cleanup stays with the single-writer compactors."""
+    frame_dir = f"{root}/{frame}"
+    heal_missing_src(frame_dir)
+    heal_missing_cells(frame_dir)
     return _read_segments(spark, root, frame, committed_segments(root, frame))
 
 
@@ -759,8 +764,6 @@ def merge_segment_frames(
 
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
     live = committed_segments(root, frame)
     if len(live) < min_segments:
         return None
@@ -768,19 +771,8 @@ def merge_segment_frames(
     # frame participates in the token: merging two frames over the same
     # source set must yield distinct segment names
     token = "m" + hashlib.sha1("|".join([frame, *tokens]).encode()).hexdigest()[:12]
-    stage = stage_segment_dir(root, token)
-    dst_frame = os.path.join(stage, frame)
-    cell_abs = _cell_absorbed_map(os.path.join(root, frame))
-    parts = []
-    for tok, sub in live:
-        if not _has_data_files(sub):
-            continue
-        seg = spark.read.parquet(sub)
-        cells = cell_abs.get(tok)
-        if cells:
-            col, vals = _cell_values(cells)
-            seg = seg.filter(~F.col(col).isin(vals))
-        parts.append(seg)
+    dst_frame = os.path.join(stage_segment_dir(root, token), frame)
+    parts = _segment_branches(spark, root, frame, live)
     if parts:
         merged = reduce(lambda a, b: a.unionByName(b), parts)
         merged.coalesce(target_files).write.mode("overwrite").parquet(dst_frame)
@@ -945,27 +937,32 @@ def _cell_file_count(d: str) -> int:
         return 0
 
 
-def cell_fragment_counts(root: str, frame: str) -> dict[str, int]:
-    """Data-file count per hive cell (``col=value`` dirname) across the
-    base frame and every committed, unabsorbed segment branch —
-    excluding (token, cell) pairs the cell-level markers say are
-    already folded in. This is the fragment census the incremental
-    compactor sizes its victim set from; it reads directory listings
-    only, never data."""
+def _cell_census(
+    root: str, frame: str, pairs
+) -> tuple[dict[str, int], dict[str, set[str]]]:
+    """One walk over the base frame and the given segment branches:
+    (data-file count per hive cell, segment tokens per cell), leaving
+    out the (token, cell) pairs the cell-level markers say are already
+    folded in. Directory listings only, never data."""
     import os
 
     base_dir = f"{root}/{frame}"
     cell_abs = _cell_absorbed_map(base_dir)
     counts: dict[str, int] = {}
+    tokens: dict[str, set[str]] = {}
+
+    def add(name: str, d: str) -> None:
+        n = _cell_file_count(d)
+        if n:
+            counts[name] = counts.get(name, 0) + n
+
     try:
         for name in os.listdir(base_dir):
             if _is_cell_dir(name):
-                n = _cell_file_count(os.path.join(base_dir, name))
-                if n:
-                    counts[name] = counts.get(name, 0) + n
+                add(name, os.path.join(base_dir, name))
     except OSError:
         pass
-    for token, sub in committed_segments(root, frame):
+    for token, sub in pairs:
         try:
             names = os.listdir(sub)
         except OSError:
@@ -973,10 +970,19 @@ def cell_fragment_counts(root: str, frame: str) -> dict[str, int]:
         for name in names:
             if not _is_cell_dir(name) or name in cell_abs.get(token, ()):
                 continue
-            n = _cell_file_count(os.path.join(sub, name))
-            if n:
-                counts[name] = counts.get(name, 0) + n
-    return counts
+            tokens.setdefault(name, set()).add(token)
+            add(name, os.path.join(sub, name))
+    return counts, tokens
+
+
+def cell_fragment_counts(root: str, frame: str) -> dict[str, int]:
+    """Data-file count per hive cell (``col=value`` dirname) across the
+    base frame and every committed, unabsorbed segment branch —
+    excluding (token, cell) pairs the cell-level markers say are
+    already folded in. This is the fragment census the incremental
+    compactor sizes its victim set from; it reads directory listings
+    only, never data."""
+    return _cell_census(root, frame, committed_segments(root, frame))[0]
 
 
 def compact_cells_incremental(
@@ -985,7 +991,6 @@ def compact_cells_incremental(
     frame: str,
     max_fragments: int = 1,
     fail_after_first_rename_of: str | None = None,
-    _site_prepped: bool = False,
 ) -> list[str]:
     """Rewrite ONLY the cells of ``<root>/<frame>`` whose fragment count
     exceeds ``max_fragments`` (base files + unabsorbed segment files),
@@ -996,52 +1001,31 @@ def compact_cells_incremental(
     one shuffle on the partition key), then V two-rename swaps commit
     them cell-by-cell. ``fail_after_first_rename_of`` is the
     fault-injection hook: crash after renaming that cell's live dir
-    away (the reader/writer heal paths cover it). ``_site_prepped``:
-    the caller already ran heal_cell_sites + purge_stale_stage_dirs
-    under its maintenance lease — set when this pass runs CONCURRENTLY
-    with another maintenance job of the same writer whose staging the
-    purge must not race (dedup.lsh_index_compact_incremental)."""
+    away (the reader/writer heal paths cover it). Heals this frame's
+    cell sites first; the root's stale ``.stage_*`` purge belongs to
+    the caller (``compact_index_incremental``)."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
     base_dir = f"{root}/{frame}"
-    if not _site_prepped:
-        heal_cell_sites(base_dir)
-        purge_stale_stage_dirs(root)
-    counts = cell_fragment_counts(root, frame)
+    heal_cell_sites(base_dir)
+    # pin the token set ONCE (ADVICE r11): the census, the rewrite input
+    # and the marker contents — a segment committed after this point
+    # stays a live segment untouched by this pass
+    pairs = committed_segments(root, frame)
+    counts, tokens_by_cell = _cell_census(root, frame, pairs)
     victims = sorted(name for name, n in counts.items() if n > max_fragments)
     if not victims:
         return []
     col, vals = _cell_values(set(victims))
 
-    # pin the token set ONCE (ADVICE r11): the rewrite input, the
-    # marker contents, and nothing else — a segment committed after
-    # this point stays a live segment untouched by this pass
-    pairs = committed_segments(root, frame)
-    victim_set = set(victims)
-    tokens_by_cell: dict[str, set[str]] = {c: set() for c in victims}
-    cell_abs = _cell_absorbed_map(base_dir)
-    for token, sub in pairs:
-        try:
-            names = os.listdir(sub)
-        except OSError:
-            continue
-        for name in names:
-            if name in victim_set and name not in cell_abs.get(token, ()):
-                tokens_by_cell[name].add(token)
-
     df = _read_segments(spark, root, frame, pairs).filter(F.col(col).isin(vals))
     stage = os.path.join(base_dir, _CELL_TMP)
     if os.path.isdir(stage):
         shutil.rmtree(stage)
-    (
-        df.repartition(col)
-        .write.mode("overwrite")
-        .partitionBy(col)
-        .parquet(stage)
-    )
+    write_partitioned(df.repartition(col), stage, [col])
     for cell in victims:
         staged_cell = os.path.join(stage, cell)
         # a victim whose visible rows are all-empty files still swaps
@@ -1053,7 +1037,7 @@ def compact_cells_incremental(
         # dropping them would re-include those rows
         old_absorbed = absorbed_tokens(live) if os.path.isdir(live) else set()
         write_absorbed_marker(
-            staged_cell, sorted(tokens_by_cell[cell] | old_absorbed)
+            staged_cell, sorted(tokens_by_cell.get(cell, set()) | old_absorbed)
         )
         pre = os.path.join(
             base_dir, f"{_CELL_PRE_PREFIX}{cell}{_CELL_PRE_SUFFIX}"
@@ -1067,3 +1051,135 @@ def compact_cells_incremental(
             shutil.rmtree(pre)
     shutil.rmtree(stage, ignore_errors=True)
     return victims
+
+
+# ------------------------------------------------------- maintenance core
+#
+# Every index family hands its layout — {frame: partition column or
+# None} — to these two passes; no family carries maintenance code of
+# its own. A PARTITIONED frame is rewritten as one file per hive cell
+# (key shuffle + partitioned write); an UNPARTITIONED frame has no cells
+# to be selective over, so the full pass size-compacts it
+# (compact_small_files) and the incremental pass tier-merges its live
+# segment copies (merge_segment_frames). compact_small_files and
+# merge_segment_frames are called through this module's globals, so a
+# test that swaps either one reaches the core.
+
+
+def compact_index(
+    spark, root: str, frames: dict, fail_between_renames: bool = False
+) -> int:
+    """Full compaction of the index at ``root`` — the maintenance pass a
+    daily-ingest deployment schedules like a table OPTIMIZE: every
+    append adds one segment with one file per touched cell, so a
+    long-lived index accumulates appends×cells small files whose
+    open/footer overhead comes to dominate scans. Folds every committed
+    segment into each frame of ``frames`` and returns the final
+    data-file count over all frames. Query results are INVARIANT (row
+    sets unchanged; doubles round-trip parquet exactly) and the hive
+    layout is preserved, so partition pruning is untouched.
+
+    Under the maintenance lease (a second maintenance writer raises
+    MaintenanceLeaseHeld instead of racing the swap):
+
+    1. heal every frame's swap site (``heal_compaction_site``) and the
+       cell sites of partitioned frames (``heal_cell_sites``), then
+       purge segments a crashed earlier pass absorbed and orphaned
+       ``.stage_*`` dirs (appenders are quiesced during maintenance, so
+       nothing there is in flight);
+    2. pin each frame's live tokens ONCE: each rewrite reads exactly its
+       pinned set, so a segment committed after the pin is neither
+       folded in nor marked absorbed — it stays live for the next pass;
+    3. rewrite the frames concurrently into ``<frame>_compacting``;
+    4. one by one in layout order, write the ``_absorbed`` marker into
+       the rewrite and swap it live (``swap_compacted``) — the marker
+       commits with its data in the same rename, so no reader ever
+       counts an absorbed segment twice, and between two frame swaps
+       each frame's view is still complete on its own; then purge the
+       segments every frame has absorbed.
+
+    The marker names the live tokens, the tokens merged segments
+    supersede and the tokens earlier passes absorbed, over all frames,
+    so an append re-running a purged segment's token stays a no-op.
+    Every crash state the swaps can leave — half-swapped (frame absent,
+    the intact original under ``<frame>_pre_compact``),
+    swapped-but-uncleaned, or an uncommitted ``<frame>_compacting`` —
+    is healed by the next compaction or, for the frame-absent state, by
+    the next reader (``read_with_segments``); no data-loss window at
+    any point. ``fail_between_renames`` injects a crash between the
+    first frame's two swap renames (recovery entries and tests)."""
+    from pathlib import Path
+
+    with maintenance_lease(root, "compact"):
+        for frame, col in frames.items():
+            heal_compaction_site(f"{root}/{frame}")
+            if col:
+                heal_cell_sites(f"{root}/{frame}")
+        purge_absorbed_segments(root, list(frames))
+        purge_stale_stage_dirs(root)
+        pinned = {fr: [t for t, _ in committed_segments(root, fr)] for fr in frames}
+        absorb = set().union(*pinned.values())
+        for fr in frames:
+            absorb |= superseded_tokens(root, fr) | absorbed_tokens(f"{root}/{fr}")
+
+        def rewrite(frame: str, col: str | None) -> None:
+            src = f"{root}/{frame}"
+            df = read_segments_pinned(spark, root, frame, pinned[frame])
+            if col:
+                write_partitioned(df.repartition(col), src + _TMP_SUFFIX, [col])
+            else:
+                compact_small_files(spark, src, src + _TMP_SUFFIX, df=df)
+
+        run_concurrently(
+            *(lambda fr=fr, col=col: rewrite(fr, col) for fr, col in frames.items())
+        )
+        for i, frame in enumerate(frames):
+            src = f"{root}/{frame}"
+            write_absorbed_marker(src + _TMP_SUFFIX, absorb)
+            swap_compacted(src, fail_between_renames and i == 0)
+        purge_absorbed_segments(root, list(frames))
+        return sum(
+            1 for fr in frames for _ in Path(f"{root}/{fr}").rglob("*.parquet")
+        )
+
+
+def compact_index_incremental(
+    spark,
+    root: str,
+    frames: dict,
+    max_fragments: int = 1,
+    fail_after_first_rename_of: str | None = None,
+) -> list[str]:
+    """Delta-proportional maintenance of the index at ``root`` (the
+    Lucene move: merge fragments, don't rewrite the index). Each
+    partitioned frame rewrites ONLY the cells whose data-file count
+    across base + unabsorbed segments exceeds ``max_fragments``
+    (``compact_cells_incremental``); every other cell's files stay
+    byte-identical. Each unpartitioned frame tier-merges its live
+    segment copies into one merged segment once there are more than
+    ``max_fragments`` of them (``merge_segment_frames``); its base is
+    never read or rewritten. Space reclaim and base defragmentation stay
+    with ``compact_index``. Query results are invariant at every crash
+    point (markers and supersedes lists commit with their renames).
+
+    Under the maintenance lease, the stale ``.stage_*`` purge runs once
+    up front, then the per-frame passes — which touch disjoint frames —
+    run concurrently, so no purge races a merge's in-flight staging
+    dir. ``fail_after_first_rename_of`` names a cell whose swap crashes
+    after its first rename (recovery entries and tests). Returns the
+    rewritten cell dirnames of the partitioned frames."""
+    with maintenance_lease(root, "compact_incremental"):
+        purge_stale_stage_dirs(root)
+
+        def compact(frame: str, col: str | None) -> list[str]:
+            if col:
+                return compact_cells_incremental(
+                    spark, root, frame, max_fragments, fail_after_first_rename_of
+                )
+            merge_segment_frames(spark, root, frame, min_segments=max_fragments + 1)
+            return []
+
+        per_frame = run_concurrently(
+            *(lambda fr=fr, col=col: compact(fr, col) for fr, col in frames.items())
+        )
+        return [cell for cells in per_frame for cell in cells]

@@ -16,6 +16,7 @@ same plan shape.
 from __future__ import annotations
 
 import hashlib
+import logging
 import struct
 
 from pyspark.sql import Column, DataFrame, Window
@@ -46,6 +47,8 @@ __all__ = [
     "cluster_balanced_sample",
 ]
 
+log = logging.getLogger("gmall_flink_20_spark")
+
 
 # Trained-quantizer artifact memo (see kmeans_centroids_local). Keys are
 # (kind, input fingerprint, params); values are the tiny driver-side
@@ -70,12 +73,22 @@ def _memo_fingerprint(df: DataFrame) -> tuple:
     """Input identity for the artifact memo: (plan semanticHash, schema,
     source-file stats). File stats are a driver-side listing only — no
     job runs; capped at 64 files (a training input with more files than
-    that is fingerprinted by its first 64 plus the total count)."""
+    that is fingerprinted by its first 64 plus the total count). A frame
+    Spark cannot list files for (a streaming frame raises
+    AnalysisException) is keyed on its plan alone, and says so in the
+    log; any other error propagates."""
     import os
+
+    from pyspark.errors import AnalysisException
 
     try:
         files = sorted(df.inputFiles())
-    except Exception:  # noqa: BLE001 — e.g. streaming frames
+    except AnalysisException as e:
+        log.warning(
+            "artifact memo keys this input on its plan hash only "
+            "(no input file listing: %s)",
+            str(e).splitlines()[0],
+        )
         files = []
     stats: list[tuple] = [("n_files", len(files))]
     for f in files[:64]:
@@ -1414,6 +1427,15 @@ def pq_code_balance(
 
 # ---------------------------------------------------------------- persisted IVF
 
+# Persisted-index layouts (io_sinks "index storage"): frame name ->
+# hive partition column, None for an unpartitioned frame. IVF and IVF-PQ
+# store list_id-partitioned postings; OPQ stores one unpartitioned codes
+# frame.
+IVF_FRAMES = {"postings": "list_id"}
+OPQ_FRAMES = {"codes": None}
+(_POSTINGS,) = IVF_FRAMES
+(_CODES,) = OPQ_FRAMES
+
 
 def ivf_index_write(
     emb: DataFrame,
@@ -1496,7 +1518,7 @@ def _write_postings(postings: DataFrame, root: str) -> None:
     from ..io_sinks import write_partitioned
 
     write_partitioned(
-        postings.repartition("list_id"), f"{root}/postings", ["list_id"]
+        postings.repartition("list_id"), f"{root}/{_POSTINGS}", ["list_id"]
     )
 
 
@@ -1517,9 +1539,10 @@ def _write_small_parquet(dirpath: str, cols: dict, schema) -> None:
 
 
 def ivf_index_load_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
-    """Reload the coarse quantizer from a persisted index — a driver-
-    side pyarrow read of the nlist-row centroids parquet (KB-scale
-    artifact; no Spark job, same class as the trained-quantizer memo)."""
+    """Reload the coarse quantizer from a persisted IVF or IVF-PQ index
+    — a driver-side pyarrow read of the nlist-row centroids parquet
+    (KB-scale artifact; no Spark job, same class as the trained-quantizer
+    memo)."""
     import os
 
     import pyarrow.parquet as pq
@@ -1527,7 +1550,8 @@ def ivf_index_load_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
     if not os.path.isdir(f"{path}/centroids"):
         raise FileNotFoundError(
             f"no IVF index at {path!r}: centroids/ missing — build one "
-            "with ivf_index_write before loading or appending"
+            "with ivf_index_write or ivf_pq_index_write before loading "
+            "or appending"
         )
     t = pq.read_table(f"{path}/centroids").to_pydict()
     return sorted(
@@ -1566,15 +1590,8 @@ def ann_ivf_persisted_topk(
     """
     import numpy as np
 
-    from ..io_sinks import heal_missing_cells, heal_missing_src, read_with_segments
+    from ..io_sinks import read_with_segments
 
-    # reader-side crash recovery: a compactor that died between its two
-    # swap renames leaves postings/ absent with the intact original
-    # under postings_pre_compact/ — restore it instead of failing; the
-    # incremental compactor's per-cell analog restores half-swapped
-    # cells (.cell.pre present, live cell dir absent)
-    heal_missing_src(f"{path}/postings")
-    heal_missing_cells(f"{path}/postings")
     cents = ivf_index_load_centroids(spark, path)
     # ONE job fetches the query batch (|queries| rows — client-scale,
     # like any ANN request): raw vector + its Spark-computed unit copy
@@ -1621,7 +1638,7 @@ def ann_ivf_persisted_topk(
     # atomic-append segments fold in, each with its own pruned
     # FileIndex; in-flight (staged) appends are invisible — a reader
     # racing an append sees pre- or post-append, never torn
-    postings = read_with_segments(spark, path, "postings").filter(
+    postings = read_with_segments(spark, path, _POSTINGS).filter(
         F.col("list_id").isin(probed)
     )
     scored = (
@@ -1680,88 +1697,22 @@ def ivf_index_append(
         base = with_unit(delta.select(F.col(id_col), F.col(vec_col)), vec_col, dim)
         _write_postings(_ivf_postings(base, cents, id_col, vec_col), dst)
 
-    return append_segment(path, token, ("postings",), stage, commit)
+    return append_segment(path, token, tuple(IVF_FRAMES), stage, commit)
 
 
 def ivf_index_compact(
     spark, path: str, fail_between_renames: bool = False
 ) -> int:
-    """Index maintenance after appends — the compaction pass a
-    daily-ingest deployment schedules: every ivf_index_append adds one
-    segment with one file per touched cell, so a long-lived index
-    accumulates appends×cells small files whose open/footer overhead
-    comes to dominate probe scans. Folds every committed segment into
-    the postings one-file-per-cell (key shuffle + partitioned write
-    into a sibling dir, then a rename swap) and returns the final
-    data-file count. The absorbed marker keeps the tokens earlier
-    compactions absorbed, so a purged segment's token stays seen by
-    ``ivf_index_append``.
+    """Full compaction of a persisted IVF or IVF-PQ index
+    (io_sinks.compact_index over ``IVF_FRAMES``): folds every committed
+    segment into the postings, one file per ``list_id=`` cell, and
+    returns the final data-file count. Proven result-invariant by the
+    emb_index_compact entry, gated on the same base-trained oracle as
+    emb_index_append. ``fail_between_renames`` injects the mid-swap
+    crash for the recovery entry and tests."""
+    from ..io_sinks import compact_index
 
-    Query results are INVARIANT (row set unchanged; doubles round-trip
-    parquet exactly) — proven by the emb_index_compact registry entry
-    gating on the same base-trained oracle as emb_index_append, and by
-    the pre/post equality test. Partition pruning semantics are
-    untouched: the hive layout (list_id= dirs) is preserved.
-
-    Single-writer maintenance pass (schedule like a table OPTIMIZE):
-    the swap is two renames, so a reader that resolved its FileIndex
-    before the swap must re-resolve after it — plans built through
-    io.load_table do, via the directory fingerprint. Crash recovery is
-    AUTOMATIC (VERDICT r9 item 2): every crash state the swap can leave
-    — half-swapped (postings absent, the intact original under
-    ``postings_pre_compact``), swapped-but-uncleaned, or an uncommitted
-    ``postings_compacting`` — is healed by the next compactor run
-    (io_sinks.heal_compaction_site, called first thing here) or, for
-    the src-absent state, by the next READER (heal_missing_src in
-    ann_ivf_persisted_topk / ivf_index_cell_stats). No data-loss window
-    at any point. ``fail_between_renames`` injects the mid-swap crash
-    for the recovery entry/tests."""
-    from pathlib import Path
-
-    from ..io_sinks import (
-        absorbed_tokens,
-        committed_segments,
-        heal_cell_sites,
-        heal_compaction_site,
-        maintenance_lease,
-        purge_absorbed_segments,
-        purge_stale_stage_dirs,
-        read_segments_pinned,
-        swap_compacted,
-        write_absorbed_marker,
-        write_partitioned,
-    )
-
-    # writer fence (VERDICT r12 item 5): a second maintenance writer
-    # fails fast (MaintenanceLeaseHeld) instead of racing the swap
-    with maintenance_lease(path, "ivf_compact"):
-        src = f"{path}/postings"
-        heal_compaction_site(src)
-        heal_cell_sites(src)
-        # a prior compactor may have crashed between its swap and its
-        # segment purge: its absorbed segments are still on disk (readers
-        # already skip them) — single-writer cleanup happens here, as does
-        # the orphaned-staging purge (ADVICE r11: a crashed or abandoned
-        # .stage_* dir otherwise leaks forever; compaction is serialized
-        # against appenders, so nothing here is in-flight)
-        purge_absorbed_segments(path, ["postings"])
-        purge_stale_stage_dirs(path)
-        tmp = f"{path}/postings_compacting"
-        # token set captured ONCE; the rewrite reads EXACTLY these tokens'
-        # segments (ADVICE r11: a segment committed between this capture
-        # and the rewrite job stays a live segment — neither folded in nor
-        # marked absorbed, so readers never double-count it)
-        tokens = [t for t, _ in committed_segments(path, "postings")]
-        df = read_segments_pinned(spark, path, "postings", tokens)
-        write_partitioned(df.repartition("list_id"), tmp, ["list_id"])
-        # the marker commits WITH the rewrite (same rename): at no crash
-        # point can a reader double-count an absorbed segment. It carries
-        # the tokens earlier passes absorbed forward, so an append that
-        # re-runs a purged segment's token stays a no-op
-        write_absorbed_marker(tmp, set(tokens) | absorbed_tokens(src))
-        swap_compacted(src, fail_between_renames)
-        purge_absorbed_segments(path, ["postings"])
-        return sum(1 for _ in Path(src).rglob("*.parquet"))
+    return compact_index(spark, path, IVF_FRAMES, fail_between_renames)
 
 
 def ivf_index_compact_incremental(
@@ -1770,30 +1721,20 @@ def ivf_index_compact_incremental(
     max_fragments: int = 1,
     fail_after_first_rename_of: str | None = None,
 ) -> list[str]:
-    """Fragmented-cells-ONLY maintenance for the persisted IVF index
-    (VERDICT r11 item 2; io_sinks.compact_cells_incremental): count
-    data files per ``list_id=`` cell across the base postings and the
-    unabsorbed segments, rewrite only cells above ``max_fragments``
-    (folding their segment copies in under cell-level absorbed
-    markers), and leave every other cell's files byte-identical —
-    Lucene merges fragmented segments, it does not rewrite the index.
-    At 100 TB this bounds a maintenance pass by the HOT cells' size
-    (the ones ingest actually touched) instead of the corpus size,
-    while the full ``ivf_index_compact`` remains the space-reclaim /
-    defragment-everything pass. Query results are invariant (same
-    visible row multiset at every crash point — the markers commit
-    with each cell's rename), so the emb_index_compact_incremental
-    entry gates on the same base-trained oracle as every other
-    lifecycle entry. Single-writer, like all maintenance — fenced by
-    the r13 maintenance lease (a concurrent maintenance writer raises
-    MaintenanceLeaseHeld instead of racing). Returns the rewritten cell
+    """Fragmented-cells-only maintenance of a persisted IVF index
+    (io_sinks.compact_index_incremental over ``IVF_FRAMES``): rewrites
+    only the ``list_id=`` cells holding more than ``max_fragments``
+    data files across base + unabsorbed segments. Appends touch cell
+    subsets here, so a pass is bounded by the HOT cells' size rather
+    than the corpus size, while ``ivf_index_compact`` remains the
+    space-reclaim pass. Gated by the emb_index_compact_incremental
+    entry on the base-trained oracle. Returns the rewritten cell
     dirnames."""
-    from ..io_sinks import compact_cells_incremental, maintenance_lease
+    from ..io_sinks import compact_index_incremental
 
-    with maintenance_lease(path, "ivf_compact_incremental"):
-        return compact_cells_incremental(
-            spark, path, "postings", max_fragments, fail_after_first_rename_of
-        )
+    return compact_index_incremental(
+        spark, path, IVF_FRAMES, max_fragments, fail_after_first_rename_of
+    )
 
 
 def ivf_index_cell_stats(spark, path: str) -> DataFrame:
@@ -1810,13 +1751,11 @@ def ivf_index_cell_stats(spark, path: str) -> DataFrame:
     nlist without a Spark job."""
     import pyarrow.parquet as pq
 
-    from ..io_sinks import heal_missing_cells, heal_missing_src, read_with_segments
+    from ..io_sinks import read_with_segments
 
-    heal_missing_src(f"{path}/postings")
-    heal_missing_cells(f"{path}/postings")
     meta = pq.read_table(f"{path}/meta").to_pydict()
     nlist = int(meta["nlist"][0])
-    post = read_with_segments(spark, path, "postings")
+    post = read_with_segments(spark, path, _POSTINGS)
     sizes = post.groupBy("list_id").agg(
         F.count(F.lit(1)).cast("long").alias("s")
     )
@@ -1923,19 +1862,9 @@ def _pq_postings(
 def ivf_pq_index_load(spark, path: str):
     """Reload the IVF-PQ trained artifacts (driver-side pyarrow reads,
     KB-scale, no Spark job): (centroids, codebooks, meta dict)."""
-    import os
-
     import pyarrow.parquet as pq
 
-    if not os.path.isdir(f"{path}/centroids"):
-        raise FileNotFoundError(
-            f"no IVF-PQ index at {path!r}: centroids/ missing — build one "
-            "with ivf_pq_index_write first"
-        )
-    t = pq.read_table(f"{path}/centroids").to_pydict()
-    cents = sorted(
-        (int(c), [float(x) for x in v]) for c, v in zip(t["cid"], t["cv"])
-    )
+    cents = ivf_index_load_centroids(spark, path)
     b = pq.read_table(f"{path}/codebooks").to_pydict()
     meta_t = pq.read_table(f"{path}/meta").to_pydict()
     meta = {k_: int(v[0]) for k_, v in meta_t.items()}
@@ -1968,10 +1897,8 @@ def ann_ivf_pq_persisted_topk(
     through the emb_index_pq_persist entry. Reader-side crash healing
     as in the uncompressed index; the scan is segment-aware, so
     appended segments fold in exactly as for the raw-vector layout."""
-    from ..io_sinks import heal_missing_cells, heal_missing_src
+    from ..io_sinks import read_with_segments
 
-    heal_missing_src(f"{path}/postings")
-    heal_missing_cells(f"{path}/postings")
     cents, books, meta = ivf_pq_index_load(spark, path)
     m, subdim, ks, dim = meta["m"], meta["subdim"], meta["ks"], meta["dim"]
     qrows = sorted(
@@ -1989,9 +1916,7 @@ def ann_ivf_pq_persisted_topk(
         probe_rows, "query_id long, list_id int, dt array<double>"
     )
     probed = sorted({r[1] for r in probe_rows})
-    from ..io_sinks import read_with_segments
-
-    postings = read_with_segments(spark, path, "postings").filter(
+    postings = read_with_segments(spark, path, _POSTINGS).filter(
         F.col("list_id").isin(probed)
     )
     return _adc_ranked(probes, postings, k, m, ks)
@@ -2010,9 +1935,9 @@ def ivf_pq_index_append(
     batch with the FROZEN on-disk artifacts (coarse quantizer + PQ
     codebooks, reloaded, never retrained) and publish the (neighbor_id,
     codes) rows as one atomic, token-idempotent segment — the same
-    contract as ``ivf_index_append``. Compaction reuses
-    ivf_index_compact unchanged (the swap convention is layout-
-    agnostic). Gated through emb_index_pq_append against the
+    contract as ``ivf_index_append``. Both layouts are ``IVF_FRAMES``,
+    so ivf_index_compact and ivf_index_compact_incremental maintain
+    this index too. Gated through emb_index_pq_append against the
     base-trained IVF-PQ oracle."""
     from ..io_sinks import append_segment
 
@@ -2023,7 +1948,7 @@ def ivf_pq_index_append(
             dst,
         )
 
-    return append_segment(path, token, ("postings",), stage, commit)
+    return append_segment(path, token, tuple(IVF_FRAMES), stage, commit)
 
 
 # ---------------------------------------------------------------- OPQ
@@ -2336,7 +2261,7 @@ def _write_opq_codes(
     enc = _opq_encode_udf(R, books, m, subdim)
     df.select(
         F.col(id_col).alias("neighbor_id"), enc(F.col(vec_col)).alias("codes")
-    ).write.mode("overwrite").parquet(f"{root}/codes")
+    ).write.mode("overwrite").parquet(f"{root}/{_CODES}")
 
 
 def opq_index_load(spark, path: str):
@@ -2379,7 +2304,7 @@ def ann_opq_persisted_topk(
         .select(id_col, vec_col)
         .collect()
     )
-    encoded = read_with_segments(spark, path, "codes")
+    encoded = read_with_segments(spark, path, _CODES)
     return _opq_adc_rank(spark, encoded, qrows, R, books, k, m, subdim, ks)
 
 
@@ -2404,4 +2329,4 @@ def opq_index_append(
         R, books, m, subdim, _ = opq_index_load(delta.sparkSession, path)
         _write_opq_codes(delta, dst, R, books, m, subdim, id_col, vec_col)
 
-    return append_segment(path, token, ("codes",), stage, commit)
+    return append_segment(path, token, tuple(OPQ_FRAMES), stage, commit)

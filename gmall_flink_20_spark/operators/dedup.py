@@ -1550,6 +1550,11 @@ def bloom_membership_report(
 
 # ------------------------------------------------ persisted LSH index
 
+# Layout of the persisted LSH index (io_sinks "index storage"): bands
+# partitioned by band_id, shingles unpartitioned.
+LSH_FRAMES = {"bands": "band_id", "shingles": None}
+_BANDS, _SHINGLES = LSH_FRAMES
+
 
 def _sig_shingle_frames(
     df: DataFrame,
@@ -1636,9 +1641,9 @@ def lsh_index_write(
                 banded.repartition("band_id")
                 .write.mode("overwrite")
                 .partitionBy("band_id")
-                .parquet(f"{path}/bands")
+                .parquet(f"{path}/{_BANDS}")
             ),
-            lambda: sh.write.mode("overwrite").parquet(f"{path}/shingles"),
+            lambda: sh.write.mode("overwrite").parquet(f"{path}/{_SHINGLES}"),
         ]
         if parallelism:
             run_concurrently(*writes)
@@ -1679,18 +1684,10 @@ def lsh_index_query_incremental(
 
     With ``parallelism`` set (a bulk shard) the answer is computed before
     the call returns, into session scratch space, and the shard frame
-    persisted for it is released; without it the frame is lazy.
-
-    Reader-side crash recovery: a compactor that died mid-swap leaves
-    bands/ or shingles/ absent with the intact original under the
-    ``*_pre_compact`` name — restored here before reading (restore-only;
-    destructive cleanup stays with the single-writer compactor)."""
-    from ..io_sinks import heal_missing_cells, heal_missing_src, read_with_segments
+    persisted for it is released; without it the frame is lazy."""
+    from ..io_sinks import read_with_segments
     from ..scratch import scratch_dir
 
-    heal_missing_src(f"{path}/bands")
-    heal_missing_src(f"{path}/shingles")
-    heal_missing_cells(f"{path}/bands")
     # r14: the shard's signatures (consumed by BOTH candidate branches)
     # and its shingle sets (the verify operand) come from one combined
     # pass — persisted on the bulk path, split on the per-micro-batch
@@ -1704,7 +1701,7 @@ def lsh_index_query_incremental(
     # segment-aware reads (io_sinks.read_with_segments): committed
     # appended segments fold in; staged (in-flight) ones are invisible
     # — pre- or post-append views only, never torn
-    idx = read_with_segments(spark, path, "bands").select(
+    idx = read_with_segments(spark, path, _BANDS).select(
         F.col(id_col).alias("doc_b"), "band_id", "band_key"
     )
     # anti-join the index side against the querying batch's OWN ids: in
@@ -1726,7 +1723,7 @@ def lsh_index_query_incremental(
         .distinct()
     )
     new_new = lsh_candidate_pairs(sig, bands, rows_per_band, id_col, from_array=True)
-    base_sh = read_with_segments(spark, path, "shingles")
+    base_sh = read_with_segments(spark, path, _SHINGLES)
     arr = new_sh.unionByName(base_sh)
     # drops: any verified base neighbor kills the new doc (doc_a = new);
     # within the shard the higher id of a verified pair drops (doc_a <
@@ -1806,7 +1803,7 @@ def lsh_index_append(
     return append_segment(
         path,
         token,
-        ("bands", "shingles"),
+        tuple(LSH_FRAMES),
         lambda dst: lsh_index_write(
             df, dst, n, num_hashes, bands, rows_per_band, text_col, id_col, parallelism
         ),
@@ -1821,169 +1818,35 @@ lsh_index_append_atomic = lsh_index_append
 def lsh_index_compact(
     spark, path: str, fail_between_renames: bool = False
 ) -> int:
-    """Maintenance pass for a persisted LSH index after appends — the
-    dedup twin of ``ann.ivf_index_compact``: every append adds one file
-    per band (plus one shingles file), so a long-lived crawl index
-    accumulates appends×bands small files. Rewrites the bands
-    one-file-per-band (key shuffle + partitioned rewrite + rename swap)
-    and size-compacts the shingles store (io_sinks.compact_small_files
-    + the same swap). Returns the final data-file count; query results
-    are invariant (row sets unchanged — proven by the
-    docs_lsh_index_compact entry gating on the shared oracle). Same
-    single-writer contract as the IVF compactor, and the same AUTOMATIC
-    crash recovery (VERDICT r9 item 2): heal_compaction_site runs first
-    thing here for every crash state a prior run could leave at either
-    swap site (bands, shingles), and readers self-heal the src-absent
-    state (heal_missing_src in lsh_index_query_incremental).
+    """Full compaction of a persisted LSH index (io_sinks.compact_index
+    over ``LSH_FRAMES``): every append adds one file per band plus one
+    shingles file, so a long-lived crawl index accumulates appends×bands
+    small files. Rewrites the bands one file per band and size-compacts
+    the shingles store, the two rewrites overlapping and the two swaps
+    in sequence. Returns the final data-file count; result-invariance
+    is proven by the docs_lsh_index_compact entry on the shared oracle.
     ``fail_between_renames`` injects a mid-swap crash at the BANDS swap
-    for the recovery entry/tests."""
-    from pathlib import Path
+    for the recovery entry and tests."""
+    from ..io_sinks import compact_index
 
-    from ..io_sinks import (
-        absorbed_tokens,
-        committed_segments,
-        compact_small_files,
-        heal_cell_sites,
-        heal_compaction_site,
-        maintenance_lease,
-        purge_absorbed_segments,
-        purge_stale_stage_dirs,
-        read_segments_pinned,
-        run_concurrently,
-        swap_compacted,
-        write_absorbed_marker,
-    )
-
-    # writer fence (VERDICT r12 item 5): a second maintenance writer
-    # fails fast (MaintenanceLeaseHeld) instead of racing the swap
-    with maintenance_lease(path, "lsh_compact"):
-        src = f"{path}/bands"
-        src2 = f"{path}/shingles"
-        heal_compaction_site(src)
-        heal_compaction_site(src2)
-        heal_cell_sites(src)
-        # crashed prior run: segments absorbed by BOTH live frames are dead
-        # weight readers already skip — single-writer cleanup, as is the
-        # orphaned-staging purge (ADVICE r11: compaction is serialized
-        # against appenders, so any .stage_* here is crashed/abandoned)
-        purge_absorbed_segments(path, ["bands", "shingles"])
-        purge_stale_stage_dirs(path)
-        # atomic-append segments fold into the rewrite; the token set is
-        # captured ONCE so both frames absorb the same segments (an appender
-        # publishes bands+shingles together, so either frame's list works —
-        # the union is belt-and-braces), and BOTH rewrites read EXACTLY this
-        # pinned set (ADVICE r11: the shingles job runs after the whole
-        # bands rewrite — a segment committed in that gap must stay a live
-        # segment, not be folded into one frame and double-counted by the
-        # other's reader; pinning closes that race, and the documented
-        # append/compact mutual exclusion makes it moot in operation).
-        # r13: the full compact folds MERGED shingle segments too, so the
-        # absorbed marker must close over their superseded sources —
-        # committed_segments already returns supersede-filtered live
-        # tokens; superseded_tokens() adds the closed-over dead ones.
-        from ..io_sinks import superseded_tokens
-
-        btokens = sorted(t for t, _ in committed_segments(path, "bands"))
-        stokens = sorted(t for t, _ in committed_segments(path, "shingles"))
-        # per-frame pinned sets (no longer the belt-and-braces union: a
-        # MERGED shingles segment is shingles-only, and its superseded
-        # sources' shingle branches must not be pinned back in)
-        # ...and the tokens earlier passes absorbed ride forward, so an
-        # append re-running a purged segment's token stays a no-op
-        absorb = sorted(
-            set(btokens)
-            | set(stokens)
-            | superseded_tokens(path, "bands")
-            | superseded_tokens(path, "shingles")
-            | absorbed_tokens(src)
-            | absorbed_tokens(src2)
-        )
-        tmp = f"{path}/bands_compacting"
-        tmp2 = f"{path}/shingles_compacting"
-        df = read_segments_pinned(spark, path, "bands", btokens)
-        # r14 (guide §2.6): the two frame REWRITES are independent jobs
-        # into sibling tmp dirs reading the pinned segment sets — overlap
-        # them; the two swaps stay sequential below, so every crash state
-        # is one the heal paths already cover (uncommitted *_compacting
-        # dirs before the first swap, the documented mid-point between
-        # the swaps).
-        run_concurrently(
-            lambda: (
-                df.repartition("band_id")
-                .write.mode("overwrite")
-                .partitionBy("band_id")
-                .parquet(tmp)
-            ),
-            lambda: compact_small_files(
-                spark,
-                src2,
-                tmp2,
-                df=read_segments_pinned(spark, path, "shingles", stokens),
-            ),
-        )
-        write_absorbed_marker(tmp, absorb)
-        swap_compacted(src, fail_between_renames)
-
-        # mid-point crash consistency: bands absorbed its segments (readers
-        # skip them there) but shingles hasn't swapped yet (readers still
-        # fold them there) — each frame's view stays complete because the
-        # absorbed marker is per-frame and rides that frame's own swap
-        write_absorbed_marker(tmp2, absorb)
-        swap_compacted(src2)
-        purge_absorbed_segments(path, ["bands", "shingles"])
-        return sum(1 for _ in Path(src).rglob("*.parquet")) + sum(
-            1 for _ in Path(src2).rglob("*.parquet")
-        )
+    return compact_index(spark, path, LSH_FRAMES, fail_between_renames)
 
 
 def lsh_index_compact_incremental(
     spark, path: str, max_fragments: int = 1
 ) -> list[str]:
-    """Fragmented-cells-only maintenance for the persisted LSH index
-    (VERDICT r11 item 2; the dedup twin of ivf_index_compact_
-    incremental): rewrite only ``band_id=`` cells whose data-file count
-    across base + unabsorbed segments exceeds ``max_fragments``,
-    folding their segment copies in under cell-level absorbed markers;
-    untouched cells' files stay byte-identical. The SHINGLES frame
-    (unpartitioned — no cells to be selective over) gets the Lucene
-    MINOR-merge instead (VERDICT r12 item 8;
-    io_sinks.merge_segment_frames): its live segment copies tier-merge
-    into ONE merged segment — delta-proportional by construction, the
-    BASE shingles frame is never read or rewritten — while space
-    reclaim / base defragmentation stays with the full
-    ``lsh_index_compact`` force-merge. Honest scale note: bands is
-    partitioned by band_id, and every append emits rows for EVERY
-    band, so after any append all band cells are fragmented — the
-    per-cell selectivity of this pass shows on indexes whose appends
-    touch cell subsets (the IVF family); here its value is folding
-    segment BANDS in (the hot join side) without rewriting the base
-    shingles (the bulk of the bytes). Query results invariant — gated
-    by docs_lsh_index_compact_incremental on the family oracle.
-    Fenced: a concurrent maintenance writer raises
-    MaintenanceLeaseHeld."""
-    from ..io_sinks import (
-        compact_cells_incremental,
-        heal_cell_sites,
-        maintenance_lease,
-        merge_segment_frames,
-        purge_stale_stage_dirs,
-        run_concurrently,
-    )
+    """Incremental maintenance of a persisted LSH index
+    (io_sinks.compact_index_incremental over ``LSH_FRAMES``): fragmented
+    ``band_id=`` cells fold their segment copies into the base while
+    the shingle segments tier-merge into one merged segment, the two
+    overlapping; the BASE shingles frame is never read or rewritten.
+    Scale note: every append emits rows for EVERY band, so after any
+    append all band cells are fragmented — the per-cell selectivity
+    shows on indexes whose appends touch cell subsets (the IVF family);
+    here the value is folding segment BANDS in (the hot join side)
+    without rewriting the base shingles (the bulk of the bytes).
+    Gated by docs_lsh_index_compact_incremental on the family oracle.
+    Returns the rewritten band cell dirnames."""
+    from ..io_sinks import compact_index_incremental
 
-    with maintenance_lease(path, "lsh_compact_incremental"):
-        # r14: site prep (heal + stale-stage purge) hoisted out of the
-        # cell compactor and run ONCE up front, so the two per-frame
-        # passes below — the bands cell rewrite and the shingles tier
-        # merge, which touch disjoint frames — can overlap (guide §2.6)
-        # without the purge racing the merge's in-flight staging dir.
-        heal_cell_sites(f"{path}/bands")
-        purge_stale_stage_dirs(path)
-        cells, _ = run_concurrently(
-            lambda: compact_cells_incremental(
-                spark, path, "bands", max_fragments, _site_prepped=True
-            ),
-            lambda: merge_segment_frames(
-                spark, path, "shingles", min_segments=max_fragments + 1
-            ),
-        )
-        return cells
+    return compact_index_incremental(spark, path, LSH_FRAMES, max_fragments)

@@ -1140,6 +1140,12 @@ def phash_neardup_stats(
     return d0.unionByName(dk)
 
 
+# Layout of the persisted phash index (io_sinks "index storage"): one
+# unpartitioned hashes frame.
+PHASH_FRAMES = {"hashes": None}
+(_HASHES,) = PHASH_FRAMES
+
+
 def phash_index_write(hashes: DataFrame, path: str) -> None:
     """Persist a perceptual-hash dedup index of the already-curated
     image corpus: one (media_id, phash) parquet — the image twin of the
@@ -1148,7 +1154,7 @@ def phash_index_write(hashes: DataFrame, path: str) -> None:
     index is GB-scale; the candidate machinery at query time operates
     on its DISTINCT hash values (bounded by 2^bits), never on pixels."""
     hashes.select("media_id", "phash").write.mode("overwrite").parquet(
-        f"{path}/hashes"
+        f"{path}/{_HASHES}"
     )
 
 
@@ -1168,7 +1174,11 @@ def phash_index_append(
     from ..io_sinks import append_segment
 
     return append_segment(
-        path, token, ("hashes",), lambda dst: phash_index_write(hashes, dst), commit
+        path,
+        token,
+        tuple(PHASH_FRAMES),
+        lambda dst: phash_index_write(hashes, dst),
+        commit,
     )
 
 
@@ -1200,7 +1210,7 @@ def phash_index_query_incremental(
     new = new_hashes.select("media_id", "phash")
     # segment-aware read: committed appended segments fold in; staged
     # (in-flight) ones are invisible — never a torn view
-    store = read_with_segments(spark, path, "hashes")
+    store = read_with_segments(spark, path, _HASHES)
     base_h = (
         store.join(new.select("media_id"), "media_id", "left_anti")
         .select("phash")

@@ -2924,13 +2924,7 @@ def docs_lsh_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             b.unpersist()
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     return store.snapshot(spark).select("doc_id", "kept")
 
 
@@ -2969,13 +2963,7 @@ def emb_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             b.unpersist()
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     return ann.ann_ivf_persisted_topk(
         spark, path, emb, list(range(10)), 5, nprobe=4
     )
@@ -2987,8 +2975,8 @@ def emb_index_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     between its two swap renames (the fault-injection hook produces
     exactly the half-swapped layout — postings/ absent, the intact
     original under postings_pre_compact/). The query that follows
-    self-heals (io_sinks.heal_missing_src inside
-    ann_ivf_persisted_topk) and must answer byte-equal to
+    self-heals (io_sinks.heal_missing_src inside the segment-aware read
+    of ann_ivf_persisted_topk) and must answer byte-equal to
     emb_index_append's oracle — one hash match proves the documented
     crash window now recovers in code, with no manual rename."""
     from .io_sinks import InterruptedCompaction
@@ -3010,8 +2998,8 @@ def docs_lsh_index_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_index_recover: crash lsh_index_compact between the bands-swap
     renames (bands/ absent, original under bands_pre_compact/), then
     dedup the new shard against the half-swapped index. The reader
-    restores the bands before scanning (heal_missing_src in
-    lsh_index_query_incremental) and must reproduce
+    restores the bands before scanning (heal_missing_src in the
+    segment-aware read of lsh_index_query_incremental) and must reproduce
     docs_neardup_incremental's oracle exactly."""
     from .io_sinks import InterruptedCompaction
 
@@ -3191,13 +3179,7 @@ def media_phash_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             hashes.unpersist()
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     return store.snapshot(spark).select("media_id", "kept")
 
 
@@ -3708,18 +3690,10 @@ def events_scd2_intervals_streaming(spark: SparkSession, sf_dir: str) -> DataFra
     store = stopn.ParquetUpsertStore(
         scratch.scratch_dir("scd2_store_") + "/log", "user_id", "k"
     )
-    with replay.replay_shuffle(spark):
-        # append mode: applyInPandasWithState emits append-only rows
-        # (the upsert semantics live in the store's last-write-wins)
-        q = (
-            rows.writeStream.foreachBatch(
-                lambda batch, epoch_id: store.upsert(batch, epoch_id)
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # append mode (foreachBatch's default): applyInPandasWithState emits
+    # append-only rows (the upsert semantics live in the store's
+    # last-write-wins)
+    replay.run_foreach_batch(rows, store.upsert)
     snap = store.snapshot(spark).drop("k")
     iv = snap.select(
         "user_id",
@@ -3810,13 +3784,7 @@ def unique_visitors_bitmap_streaming(spark: SparkSession, sf_dir: str) -> DataFr
             "append"
         ).parquet(log)
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     return distinct.bitmap_census(spark.read.parquet(log)).select(
         "window_end_s", "uv"
     )
@@ -3964,11 +3932,10 @@ def docs_lsh_index_query_during_append(spark: SparkSession, sf_dir: str) -> Data
     path = scratch.fresh_copy(
         _lsh_base_index(spark, sf_dir, (1, 2, 3)), "lsh_qda_"
     )
-    pre = _visible_rows_fingerprint(spark, path, ("bands", "shingles"))
+    frames = tuple(dedup.LSH_FRAMES)
+    pre = _visible_rows_fingerprint(spark, path, frames)
     dedup.lsh_index_append(delta, path, "d1", commit=False, parallelism=spark.sparkContext.defaultParallelism)
-    mid_equals_pre = (
-        _visible_rows_fingerprint(spark, path, ("bands", "shingles")) == pre
-    )
+    mid_equals_pre = _visible_rows_fingerprint(spark, path, frames) == pre
     io_sinks.commit_segment(path, "d1")
     return dedup.lsh_index_query_incremental(spark, path, query, parallelism=spark.sparkContext.defaultParallelism).withColumn(
         "mid_equals_pre", F.lit(bool(mid_equals_pre))
@@ -3994,10 +3961,11 @@ def media_phash_index_query_during_append(spark: SparkSession, sf_dir: str) -> D
     delta = new.filter(F.col("doc_id") < mid_id)
     query = new.filter(F.col("doc_id") >= mid_id)
     path = scratch.fresh_copy(_phash_base_index(spark, sf_dir), "phash_qda_")
-    pre = _visible_rows_fingerprint(spark, path, ("hashes",))
+    frames = tuple(multimodal.PHASH_FRAMES)
+    pre = _visible_rows_fingerprint(spark, path, frames)
     dh = multimodal.image_dhash(multimodal.encode_media(delta))
     multimodal.phash_index_append(dh, path, "d1", commit=False)
-    mid_equals_pre = _visible_rows_fingerprint(spark, path, ("hashes",)) == pre
+    mid_equals_pre = _visible_rows_fingerprint(spark, path, frames) == pre
     io_sinks.commit_segment(path, "d1")
     qh = multimodal.image_dhash(multimodal.encode_media(query))
     return multimodal.phash_index_query_incremental(spark, path, qh).withColumn(
@@ -4101,8 +4069,8 @@ def docs_lsh_index_segment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: dedup.lsh_index_append(s1.filter(half == 1), path, "a1", parallelism=spark.sparkContext.defaultParallelism),
     )
     with maintenance_lease(path, "segment_merge"):
-        assert merge_segment_frames(spark, path, "bands") is not None
-        assert merge_segment_frames(spark, path, "shingles") is not None
+        for frame in dedup.LSH_FRAMES:
+            assert merge_segment_frames(spark, path, frame) is not None
     return dedup.lsh_index_query_incremental(
         spark, path, docs.filter(shard == 0), parallelism=spark.sparkContext.defaultParallelism
     )
@@ -4260,13 +4228,7 @@ def emb_index_pq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             b.unpersist()
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     return ann.ann_ivf_pq_persisted_topk(
         spark, path, emb, list(range(10)), 5, nprobe=4
     )
@@ -4306,9 +4268,9 @@ def emb_index_recover_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     victim cell's two renames — live cell dir absent, the intact
     original parked under the Spark-invisible ``.cell.pre`` name, the
     staged rewrite (data + its absorbed marker) still hidden. The query
-    that follows self-heals (io_sinks.heal_missing_cells inside
-    ann_ivf_persisted_topk, restore-only) and must answer byte-equal to
-    emb_index_append's oracle: the pre-crash visible state — base plus
+    that follows self-heals (io_sinks.heal_missing_cells inside the
+    segment-aware read of ann_ivf_persisted_topk, restore-only) and must
+    answer byte-equal to emb_index_append's oracle: the pre-crash visible state — base plus
     the still-live segment — is reproduced exactly, no double count, no
     loss, no manual rename."""
     from .io_sinks import InterruptedCompaction
@@ -4316,7 +4278,7 @@ def emb_index_recover_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     emb, _, delta = _ivf_base90_split(spark, sf_dir)
     path = scratch.fresh_copy(_ivf_base90_index(spark, sf_dir), "ivf_increcover_")
     ann.ivf_index_append(delta, path, "d1")
-    counts = io_sinks.cell_fragment_counts(path, "postings")
+    counts = io_sinks.cell_fragment_counts(path, *ann.IVF_FRAMES)
     victims = sorted(n for n, c in counts.items() if c > 1)
     try:
         ann.ivf_index_compact_incremental(
@@ -4440,13 +4402,7 @@ def emb_index_opq_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             b.unpersist()
 
-    with replay.replay_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    replay.run_foreach_batch(stream, handle)
     _, _, e_opq, e_pq = ann.opq_train_local(base)
     approx = ann.ann_opq_persisted_topk(spark, path, emb, list(range(10)), 5)
     return ann.opq_recall_gate(

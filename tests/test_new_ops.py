@@ -621,6 +621,36 @@ def test_artifact_memo_invalidates_on_file_rewrite(spark, tmp_path):
     assert len(ann._ARTIFACT_MEMO) == 0
 
 
+
+def test_memo_fingerprint_streaming_frame_keys_on_plan_and_logs_once(
+    spark, tmp_path, caplog
+):
+    """A streaming frame has no input file listing: it is keyed on its
+    plan alone, and the fallback says so once."""
+    p = str(tmp_path / "src")
+    spark.range(5).write.parquet(p)
+    stream = spark.readStream.schema("id long").parquet(p)
+    with caplog.at_level("WARNING", logger="gmall_flink_20_spark"):
+        key = ann._memo_fingerprint(stream)
+    assert key[0] == stream.semanticHash()
+    assert key[2] == (("n_files", 0),)
+    records = [r for r in caplog.records if r.name == "gmall_flink_20_spark"]
+    assert len(records) == 1, [r.getMessage() for r in records]
+
+
+def test_memo_fingerprint_other_errors_propagate(spark, monkeypatch):
+    """Only Spark's no-file-listing error takes the plan-hash fallback;
+    any other error from inputFiles() is raised."""
+    import pytest
+
+    def broken(self):
+        raise RuntimeError("broken file listing")
+
+    df = spark.range(3)
+    monkeypatch.setattr(type(df), "inputFiles", broken)
+    with pytest.raises(RuntimeError, match="broken file listing"):
+        ann._memo_fingerprint(df)
+
 def test_derive_nlist_and_semantic_dedup_wiring(spark):
     """nlist=None derives k = max(min, ceil(n/target)) and produces the
     same result as passing that k explicitly (VERDICT r3 item 4)."""
