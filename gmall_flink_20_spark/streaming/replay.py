@@ -19,13 +19,14 @@ import contextlib
 import logging
 import os
 import shutil
-import tempfile
 import uuid
 from pathlib import Path
 
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..scratch import scratch_dir
 
 __all__ = [
     "replay_stream",
@@ -161,7 +162,6 @@ def replay_stream(
     batch_df: DataFrame,
     ts_col: str,
     num_chunks: int = 8,
-    workdir: str | None = None,
     extra_chunks: list[DataFrame] | None = None,
     disorder_s: int = 0,
 ) -> DataFrame:
@@ -190,9 +190,9 @@ def replay_stream(
     advances between batches. Chunk sizes are range-sampled rather than
     exactly equal-count; micro-batch COUNT, not size balance, is the
     contract."""
-    base = Path(workdir or tempfile.mkdtemp(prefix="replay_"))
-    src = base / f"src_{uuid.uuid4().hex[:8]}"
-    src.mkdir(parents=True)
+    # staged under the session scratch root, which is removed at exit
+    src = Path(scratch_dir("replay_")) / "src"
+    src.mkdir()
     schema = batch_df.schema
 
     if disorder_s:

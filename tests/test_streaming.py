@@ -4,13 +4,17 @@ batch operator's answer once the (sentinel-advanced) watermark passes."""
 
 from __future__ import annotations
 
+import re
+import tempfile
 from datetime import datetime, timezone
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from gmall_flink_20_spark.io import load_events
 from gmall_flink_20_spark.operators import patterns, windows
+from gmall_flink_20_spark.scratch import scratch_root
 from gmall_flink_20_spark.streaming import replay, stateful
 from gmall_flink_20_spark.streaming import windows as swindows
 
@@ -103,6 +107,18 @@ def test_order_timeout_stream_matches_batch(spark, small_events):
     g = sorted(map(tuple, got[["create_id", "status"]].values.tolist()))
     e = sorted(map(tuple, exp[["create_id", "status"]].values.tolist()))
     assert g == e
+
+
+def test_replay_stages_under_scratch_root_and_leaves_tmp_clean(spark, small_events):
+    tmp = Path(tempfile.gettempdir())
+    before = set(tmp.glob("replay_*"))
+    stream = replay.replay_stream(spark, small_events.select("event_id", "ts"), "ts", num_chunks=3)
+    got = replay.run_to_completion(stream)
+    assert got.count() == small_events.count()
+    assert set(tmp.glob("replay_*")) == before
+    plan = stream._jdf.queryExecution().analyzed().toString()
+    (src,) = set(re.findall(r"FileSource\[([^\]]+)\]", plan))
+    assert Path(src).is_relative_to(scratch_root())
 
 
 def test_blacklist_stream_matches_batch(spark, small_events):
